@@ -56,51 +56,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.extensions", "graft.sqlcat.GraftSqlExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Shuffle machinery (round-14, guide §2.1–2.2, measured A/B in
-      // OPTIMIZATION_r14.md): the bypass-merge shuffle writer creates
-      // M×R files per shuffle (32 maps × 32 reduces = 1024 creates on
-      // this FS); the sort writer — the only path at scale, where
-      // R > 200 — writes one data+index pair per map task. Forcing it
-      // (threshold 0) cut the 32-core per-query overhead ~2× and fixed
-      // the measured ANTI-scaling (8-core sweeps beating 32-core ones).
-      // Shuffle scratch goes to the fastest local medium when present
-      // (tmpfs here; NVMe scratch on a real cluster — guide §2.1 names
-      // local disk as the tighter shuffle limit). Both parameterized,
-      // results unaffected.
-      // Joins (round-14, guide §3.1/§9): allow shuffled-hash when the
-      // per-partition build side fits — SMJ's sorts are pure overhead for
-      // the band-bucket/candidate equi-joins; AQE still rewrites to
-      // broadcast when a side is tiny. Results identical (total orders).
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "64MB"))
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "0"))
-      // Optimizer (round-14, guide §1.2 step 3): constraint propagation
-      // spends planner time inferring not-null constraints and REINSERTS
-      // them as filters that re-evaluate whole derived expression trees
-      // per row (the measured 8× shingle-substitution pathology the
-      // persist pins in Dedup/CorpusOps already guard against — that
-      // cost grows WITH data, it is not a local-mode artifact).
-      // Interleaved same-JVM A/B over 18 queries: geomean 0.94, worst
-      // regression +9% (q39), wins to −26% (q167). Parameterized;
-      // results are plan-identical by construction (optimizer rule only).
-      .config("spark.sql.constraintPropagation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CONSTRAINT_PROP", "false"))
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-        if (java.nio.file.Files.isWritable(java.nio.file.Paths.get("/dev/shm")))
-          "/dev/shm/graft-spark-local"
-        else System.getProperty("java.io.tmpdir")))
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.configure(
+      SparkSession.builder().master(s"local[$cpus]").appName("graft-bench"),
+      cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -178,23 +137,11 @@ object Bench {
     val sweepTotals = sweeps.map(_.values.sum)
     val minSum = results.map(_._2).sum
     val stallSuspect = sweepTotals.max > 3.0 * minSum
-    // CDC apply-path throughput (the reference's headline metric is its
-    // ~10 rec/s ingest + 3-5 min freshness): 100k generated events through
-    // parse->filter->LWW->merge-commit in 4 micro-batches. Clear the
-    // query-bench residue first so the rate isn't GC/cache-pressure noise.
+    // CDC apply-path throughput (CdcBench.measure). Clear the query-bench
+    // residue first so the rate isn't GC/cache-pressure noise.
     spark.catalog.clearCache()
     System.gc()
-    // 50k-record micro-batches: large enough that per-batch fixed cost
-    // stops dominating and the rate reflects sustained apply throughput;
-    // one warmup batch pays the first-use streaming/codegen tax outside
-    // the timed window (CdcBench.warmup doc)
-    CdcBench.warmup(spark)
-    // same stall guard as the query loop: a host freeze inside the timed
-    // window tanks the rate; a second run disambiguates (keep the better)
-    val cdc0 = CdcBench.run(spark, nEvents = 200000L, nBatches = 4)
-    val cdc = if (cdc0.recPerSec >= 25000) cdc0
-      else Seq(cdc0, CdcBench.run(spark, nEvents = 200000L, nBatches = 4))
-        .maxBy(_.recPerSec)
+    val cdc = CdcBench.measure(spark)
     // freshness = wall time per micro-batch (land → committed/queryable);
     // the reference's equivalent figure is 3–5 MINUTES (BASELINE.md)
     val freshness = cdc.seconds / math.max(1, cdc.batches)

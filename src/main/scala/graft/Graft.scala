@@ -14,6 +14,8 @@ import graft.table.MergeTable
   * {{{
   *   import graft.Graft
   *
+  *   val spark = Graft.configure(
+  *     SparkSession.builder().master("local[8]"), cpus = 8).getOrCreate()
   *   val cat   = Graft.catalog("/data/warehouse")
   *   val table = Graft.openTable("/data/warehouse/db/retail_trans_iceberg")
   *   val query = Graft.startCdc(spark, CdcPipeline.Config(...))
@@ -23,9 +25,8 @@ import graft.table.MergeTable
   *   spark.readStream.format("graft-changes").option("path", src).load()
   *     .writeStream.format("graft").option("path", dst).start()
   *
-  *   // SQL-first surface (catalog plugin + extensions):
+  *   // SQL-first surface (catalog plugin; configure sets the extensions):
   *   //   spark.sql.catalog.graft = graft.sqlcat.GraftCatalog
-  *   //   spark.sql.extensions   = graft.sqlcat.GraftSqlExtensions
   *   // → DDL/DML/MERGE, VERSION/TIMESTAMP AS OF, branch:/tag: refs,
   *   //   CALL graft.system.*, metadata tables t.snapshots/.files/.refs
   * }}}
@@ -41,6 +42,10 @@ import graft.table.MergeTable
   * crash-replay contract — is `graft.pipeline.CurationPipeline`.
   */
 object Graft {
+
+  /** Apply the engine's session profile ([[GraftSession]]) to a builder. */
+  def configure(builder: SparkSession.Builder, cpus: Int): SparkSession.Builder =
+    GraftSession.configure(builder, cpus)
 
   /** Open a warehouse-directory catalog (S10/S11 surface). */
   def catalog(warehouse: String): LakeCatalog = new LakeCatalog(warehouse)

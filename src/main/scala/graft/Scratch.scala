@@ -5,9 +5,10 @@ package graft
   * that create throwaway table roots (q65 SQL warehouse, q104/q116
   * incremental indexes, q105 vector index, q134 drift tables, the q00
   * golden replay, CSV/ORC round trips) were rooting them in
-  * java.io.tmpdir — disk-backed here — while shuffle scratch already
-  * moved to tmpfs. Same rule, same parameterization: tmpfs when
-  * writable, `SPARK_GRAFT_SCRATCH_DIR` to override.
+  * java.io.tmpdir — disk-backed on most hosts — while shuffle scratch
+  * already sat on tmpfs. Same rule ([[fastLocal]], shared with
+  * [[GraftSession]]'s shuffle scratch), same parameterization:
+  * `SPARK_GRAFT_SCRATCH_DIR` to override.
   *
   * LOCAL-mode placement only: these are driver+executor-shared paths in
   * local mode. On a multi-node deployment the cluster-visible location
@@ -16,10 +17,16 @@ package graft
   * storage; only per-run scratch belongs here.
   */
 object Scratch {
-  lazy val root: String = sys.env.getOrElse("SPARK_GRAFT_SCRATCH_DIR",
+  /** The fastest local medium: `/dev/shm/<name>` when tmpfs is writable,
+    * else java.io.tmpdir itself.
+    */
+  def fastLocal(name: String): String =
     if (java.nio.file.Files.isWritable(java.nio.file.Paths.get("/dev/shm")))
-      "/dev/shm/graft-scratch"
-    else System.getProperty("java.io.tmpdir"))
+      s"/dev/shm/$name"
+    else System.getProperty("java.io.tmpdir")
+
+  lazy val root: String =
+    sys.env.getOrElse("SPARK_GRAFT_SCRATCH_DIR", fastLocal("graft-scratch"))
 
   def tempDir(prefix: String): String = {
     val base = java.nio.file.Paths.get(root)

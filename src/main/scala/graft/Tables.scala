@@ -57,8 +57,8 @@ object Tables {
     * [PARQUET_TYPE_ILLEGAL] unless read as raw ns longs via
     * legacy.parquet.nanosAsLong, then floored to µs) and native µs
     * timestamps (surfacing as TIMESTAMP_NTZ when isAdjustedToUTC=false).
-    * Normalize both to session-tz TimestampType — the session runs UTC
-    * everywhere (SparkSpec/Verify/Bench), so the NTZ cast is
+    * Normalize both to session-tz TimestampType — engine sessions run UTC
+    * (GraftSession), so the NTZ cast is
     * value-preserving and downstream windows/watermarks see one type.
     */
   def events(s: SparkSession, d: String): DataFrame = {

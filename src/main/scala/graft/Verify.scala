@@ -6,31 +6,9 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.sqlcat.GraftSqlExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same shuffle-machinery defaults as Bench (round-14): results are
-      // identical, the verify wall-clock just stops paying M×R file creates
-      // Joins (round-14, guide §3.1/§9): allow shuffled-hash when the
-      // per-partition build side fits — SMJ's sorts are pure overhead for
-      // the band-bucket/candidate equi-joins; AQE still rewrites to
-      // broadcast when a side is tiny. Results identical (total orders).
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "64MB"))
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "0"))
-      .config("spark.sql.constraintPropagation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CONSTRAINT_PROP", "false"))
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-        if (Files.isWritable(Paths.get("/dev/shm")))
-          "/dev/shm/graft-spark-local"
-        else System.getProperty("java.io.tmpdir")))
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.configure(
+      SparkSession.builder().master(s"local[$cpus]"), cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

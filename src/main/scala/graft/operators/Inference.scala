@@ -872,8 +872,8 @@ object Inference {
     * k after the shorter lags are regressed out — the read that tells
     * an AR order ("is the weekly spike direct memory or just lag-1
     * compounding"). The recursion runs entirely in ×10⁶ fixed point:
-    * fixed-mul a⊗b = a·b div 10⁶ (truncating, sign-exact in both
-    * engines — the DivProbe contract), φ_{k,k} = (r_k − Σφ_{k−1,j} ⊗
+    * fixed-mul a⊗b = a·b div 10⁶ (DECIMAL(38,0) `div` truncates toward
+    * zero and keeps the sign in both engines, −7 div 2 = −3), φ_{k,k} = (r_k − Σφ_{k−1,j} ⊗
     * r_{k−j})·10⁶ div (10⁶ − Σφ_{k−1,j} ⊗ r_j), φ_{k,j} = φ_{k−1,j} −
     * φ_{k,k} ⊗ φ_{k−1,k−j} — every intermediate a BIGINT millionth, so
     * the oracle replays it digit for digit (the k-core unrolled-stage

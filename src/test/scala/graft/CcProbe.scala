@@ -16,16 +16,8 @@ object CcProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-cc-probe")
-      .config("spark.sql.extensions", "graft.sqlcat.GraftSqlExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      .config("spark.local.dir", "/dev/shm/graft-spark-local")
+    val spark = GraftSession.configure(
+      SparkSession.builder().master("local[32]").appName("graft-cc-probe"), 32)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import graft.operators.Dedup

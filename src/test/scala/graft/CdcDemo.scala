@@ -11,13 +11,8 @@ import graft.table.MergeTable
 
 object CdcDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("cdc-demo")
-      .config("spark.sql.extensions", "graft.sqlcat.GraftSqlExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.configure(
+      SparkSession.builder().master("local[4]").appName("cdc-demo"), 4)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

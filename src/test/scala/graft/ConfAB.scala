@@ -19,27 +19,9 @@ object ConfAB {
       val Array(k, v) = kv.split("=", 2); (k, v)
     }.toSeq
     val queries = args.drop(2)
-    val cpus = sys.env.getOrElse("PROBE_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-conf-ab")
-      .config("spark.sql.extensions", "graft.sqlcat.GraftSqlExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "64MB"))
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "0"))
-      .config("spark.sql.constraintPropagation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CONSTRAINT_PROP", "false"))
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-        if (java.nio.file.Files.isWritable(java.nio.file.Paths.get("/dev/shm")))
-          "/dev/shm/graft-spark-local"
-        else System.getProperty("java.io.tmpdir")))
+    val cpus = sys.env.getOrElse("PROBE_CPUS", "32").toInt
+    val spark = GraftSession.configure(
+      SparkSession.builder().master(s"local[$cpus]").appName("graft-conf-ab"), cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -3,11 +3,9 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.configure(
+      SparkSession.builder().master("local[8]"), 8)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     for (q <- args.drop(1)) {
       println(s"===== $q =====")

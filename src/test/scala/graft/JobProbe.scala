@@ -17,14 +17,8 @@ object JobProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-jobprobe")
-      .config("spark.sql.extensions", "graft.sqlcat.GraftSqlExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.configure(
+      SparkSession.builder().master("local[32]").appName("graft-jobprobe"), 32)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -20,33 +20,9 @@ object PerfProbe {
     // PROBE_CPUS lets scaling experiments vary the core count the same way
     // the driver's low-core sweep does (shuffle partitions track it, as in
     // Bench); default matches the official bench.
-    val cpus = sys.env.getOrElse("PROBE_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-probe")
-      .config("spark.sql.extensions", "graft.sqlcat.GraftSqlExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match the Bench shuffle-machinery defaults (round-14) so probe
-      // readings stay comparable to official bench lines
-      // Joins (round-14, guide §3.1/§9): allow shuffled-hash when the
-      // per-partition build side fits — SMJ's sorts are pure overhead for
-      // the band-bucket/candidate equi-joins; AQE still rewrites to
-      // broadcast when a side is tiny. Results identical (total orders).
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "64MB"))
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "0"))
-      .config("spark.sql.constraintPropagation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CONSTRAINT_PROP", "false"))
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-        if (java.nio.file.Files.isWritable(java.nio.file.Paths.get("/dev/shm")))
-          "/dev/shm/graft-spark-local"
-        else System.getProperty("java.io.tmpdir")))
+    val cpus = sys.env.getOrElse("PROBE_CPUS", "32").toInt
+    val builder = GraftSession.configure(
+      SparkSession.builder().master(s"local[$cpus]").appName("graft-probe"), cpus)
     // A/B experiments: PROBE_CONF="k=v,k=v" overlays arbitrary SQL confs.
     sys.env.get("PROBE_CONF").foreach(_.split(',').filter(_.contains("="))
       .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })

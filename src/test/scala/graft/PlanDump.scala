@@ -342,14 +342,8 @@ object PlanDump {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-plandump")
-      .config("spark.sql.extensions", "graft.sqlcat.GraftSqlExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.configure(
+      SparkSession.builder().master("local[8]").appName("graft-plandump"), 8)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

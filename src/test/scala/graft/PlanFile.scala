@@ -9,24 +9,8 @@ import org.apache.spark.sql.SparkSession
 object PlanFile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val tag = args(1); val suffix = args(2)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-planfile")
-      .config("spark.sql.extensions", "graft.sqlcat.GraftSqlExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // mirror the Bench session defaults (round-14) so dumped plans show
-      // the join strategy / shuffle shape the bench actually runs
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "64MB"))
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "0"))
-      .config("spark.sql.constraintPropagation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CONSTRAINT_PROP", "false"))
+    val spark = GraftSession.configure(
+      SparkSession.builder().master("local[32]").appName("graft-planfile"), 32)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(s"plans/$tag"))

@@ -361,14 +361,8 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("all")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-scale")
-      .config("spark.sql.extensions", "graft.sqlcat.GraftSqlExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.configure(
+      SparkSession.builder().master("local[32]").appName("graft-scale"), 32)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

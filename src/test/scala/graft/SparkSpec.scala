@@ -14,30 +14,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.extensions", "graft.sqlcat.GraftSqlExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // same shuffle-machinery defaults as Bench (round-14): identical
-    // results, suite wall-clock stops paying M×R shuffle-file creates
-    // Joins (round-14, guide §3.1/§9): allow shuffled-hash when the
-    // per-partition build side fits — SMJ's sorts are pure overhead for
-    // the band-bucket/candidate equi-joins; AQE still rewrites to
-    // broadcast when a side is tiny. Results identical (total orders).
-    .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-    .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "64MB"))
-    .config("spark.shuffle.sort.bypassMergeThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "0"))
-    .config("spark.sql.constraintPropagation.enabled",
-      sys.env.getOrElse("SPARK_GRAFT_CONSTRAINT_PROP", "false"))
-    .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-      if (Files.isWritable(java.nio.file.Paths.get("/dev/shm")))
-        "/dev/shm/graft-spark-local"
-      else System.getProperty("java.io.tmpdir")))
+  lazy val session: SparkSession = GraftSession.configure(
+    SparkSession.builder().master("local[4]").appName("graft-test"), 4)
     .getOrCreate()
 }
