@@ -247,7 +247,7 @@ object GraphOps {
     *
     * Scale shape: per iteration exactly one equi-join (ranks ⨝ edges on
     * src — co-partitionable with the edge list bucketed by src, the layout
-    * [[ScalePatterns.compactBucketed]] provides) and one groupBy(dst) sum
+    * [[ScalePatterns.writeBucketed]] provides) and one groupBy(dst) sum
     * with map-side partial aggregation; the rank state that carries
     * between iterations is one BIGINT per node. That is the canonical
     * distributed power iteration — no collect, no per-node driver state,

@@ -11,11 +11,15 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructFiel
 
 import graft.catalog.LakeCatalog
 import graft.table.MergeTable
+import graft.table.MergeTable.Rewrite._
 
 /** SQL-first table maintenance — Iceberg's stored-procedure surface
   * (`CALL catalog.system.rewrite_data_files / expire_snapshots /
   * rollback_to_snapshot ...`) over engine tables, via Spark 4's native
-  * `CALL` statement and the DSv2 [[org.apache.spark.sql.connector.catalog.ProcedureCatalog]]:
+  * `CALL` statement and the DSv2 [[org.apache.spark.sql.connector.catalog.ProcedureCatalog]].
+  * The first six are thin aliases of [[MergeTable.rewrite]], one per
+  * [[MergeTable.Rewrite]] strategy (MergeAll, Scoped, Sorted, ZOrder,
+  * Bucketed, BinPack):
   *
   * {{{
   *   CALL graft.system.compact('db.t')
@@ -52,43 +56,31 @@ private[sqlcat] object GraftProcedures {
         s"expected 'db.table', got '$qualified'")
     }
 
+  /** A `rewrite_data_files`-style procedure: the table plus `params`,
+    * running [[MergeTable.rewrite]] with the strategy built from the
+    * arguments.
+    */
+  private def rewriting(params: ProcedureParameter*)(how: InternalRow => MergeTable.Rewrite)
+      : (Seq[ProcedureParameter], (SparkSession, InternalRow, LakeCatalog) => Long) =
+    (p("table", StringType) +: params,
+      (s: SparkSession, in: InternalRow, l: LakeCatalog) => {
+        val t = resolve(l, in.getUTF8String(0).toString)
+        t.rewrite(s, how(in)); t.latestVersion
+      })
+
   /** name → (parameters, body(spark, args, lake) → latest version). */
   private val defs: Map[String, (Seq[ProcedureParameter], (SparkSession, InternalRow, LakeCatalog) => Long)] = Map(
-    "compact" -> ((Seq(p("table", StringType)),
-      (s: SparkSession, in: InternalRow, l: LakeCatalog) => {
-        val t = resolve(l, in.getUTF8String(0).toString)
-        t.compact(s); t.latestVersion
-      })),
-    "compact_scoped" -> ((Seq(p("table", StringType)),
-      (s: SparkSession, in: InternalRow, l: LakeCatalog) => {
-        val t = resolve(l, in.getUTF8String(0).toString)
-        t.compactScoped(s); t.latestVersion
-      })),
-    "compact_sorted" -> ((Seq(p("table", StringType), p("sort_by", StringType),
-        p("target_files", IntegerType)),
-      (s: SparkSession, in: InternalRow, l: LakeCatalog) => {
-        val t = resolve(l, in.getUTF8String(0).toString)
-        t.compactSorted(s, in.getUTF8String(1).toString, in.getInt(2))
-        t.latestVersion
-      })),
-    "compact_zorder" -> ((Seq(p("table", StringType), p("columns", StringType),
-        p("target_files", IntegerType)),
-      (s: SparkSession, in: InternalRow, l: LakeCatalog) => {
-        val t = resolve(l, in.getUTF8String(0).toString)
-        t.compactZOrder(s,
-          in.getUTF8String(1).toString.split(",").map(_.trim).toSeq, in.getInt(2))
-        t.latestVersion
-      })),
-    "compact_bucketed" -> ((Seq(p("table", StringType), p("buckets", IntegerType)),
-      (s: SparkSession, in: InternalRow, l: LakeCatalog) => {
-        val t = resolve(l, in.getUTF8String(0).toString)
-        t.compactBucketed(s, in.getInt(1)); t.latestVersion
-      })),
-    "bin_pack" -> ((Seq(p("table", StringType)),
-      (s: SparkSession, in: InternalRow, l: LakeCatalog) => {
-        val t = resolve(l, in.getUTF8String(0).toString)
-        t.binPack(s); t.latestVersion
-      })),
+    "compact" -> rewriting()(_ => MergeAll),
+    "compact_scoped" -> rewriting()(_ => Scoped),
+    "compact_sorted" -> rewriting(p("sort_by", StringType),
+        p("target_files", IntegerType))(in =>
+      Sorted(in.getUTF8String(1).toString, in.getInt(2))),
+    "compact_zorder" -> rewriting(p("columns", StringType),
+        p("target_files", IntegerType))(in =>
+      ZOrder(in.getUTF8String(1).toString.split(",").map(_.trim).toSeq, in.getInt(2))),
+    "compact_bucketed" -> rewriting(p("buckets", IntegerType))(in =>
+      Bucketed(in.getInt(1))),
+    "bin_pack" -> rewriting()(_ => BinPack()),
     "expire_snapshots" -> ((Seq(p("table", StringType), p("keep_last", IntegerType)),
       (_: SparkSession, in: InternalRow, l: LakeCatalog) => {
         val t = resolve(l, in.getUTF8String(0).toString)

@@ -76,7 +76,7 @@ final case class GraftSqlRewrite(spark: SparkSession) extends Rule[LogicalPlan] 
 
     // Filter directly over a graft relation: extract conjunctive integer
     // range bounds and splice a manifest-pruned read when the current
-    // snapshot's per-file stats (compactSorted/compactZOrder) can drop
+    // snapshot's per-file stats (a Sorted/ZOrder rewrite) can drop
     // files. The ORIGINAL filter stays on top — the pruned read is a
     // superset of matching rows, so results are exact even though
     // pruning is conservative.

@@ -27,6 +27,11 @@ import graft.transform.{CdcRoute, CdcTransformer}
   * `Trigger.ProcessingTime`; tests use `Trigger.AvailableNow` to drain.
   * Freshness is seconds per batch vs the reference's 3–5 minutes
   * (README.md:447) because there is no cross-service buffering.
+  *
+  * Per-layer time of a micro-batch (classify, error sink, apply,
+  * compaction, views) comes from the benchmark's traced run:
+  * `python3 perfbench/run.py --workload cdc_ingest --trace 1` reports
+  * `stream.error_sink_ms`, `table.apply_ms` and the rest.
   */
 object CdcPipeline {
 
@@ -120,15 +125,6 @@ object CdcPipeline {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // classify once, cache: both routes (error sink + merge) otherwise
         // re-run the JSON parse — the expensive half of a micro-batch
-        val debug = sys.env.contains("GRAFT_CDC_DEBUG")
-        def timed[T](label: String)(f: => T): T =
-          if (!debug) f else {
-            val t0 = System.nanoTime()
-            val r = f
-            System.err.println(
-              f"[cdc b$batchId] $label%-12s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-            r
-          }
         val classified = CdcTransformer
           .classify(batch, cfg.srcDatabase, cfg.srcTable).cache()
         try {
@@ -139,19 +135,18 @@ object CdcPipeline {
           // fails analysis on every micro-batch.
           val extras = {
             if (cfg.evolveSchema)
-              timed("drift")(CdcTransformer
-                .driftColumns(classified, table.schema.fieldNames.toSet))
+              CdcTransformer.driftColumns(classified, table.schema.fieldNames.toSet)
                 .foreach(f => table = table.addColumn(f))
             table.schema.fields.toSeq
               .filterNot(f => CdcTransformer.BasePayloadCols(f.name))
           }
           val res = CdcTransformer.fromClassified(classified, extraCols = extras)
-          timed("errors")(CdcTransformer.writeErrors(res.errors, cfg.errorRoot))
-          timed("apply")(table.applyBatch(res.good, Some(batchId.toString)))
+          CdcTransformer.writeErrors(res.errors, cfg.errorRoot)
+          table.applyBatch(res.good, Some(batchId.toString))
           // continuous view maintenance: each registered materialized view
           // advances by exactly this batch's change-feed delta (O(batch) +
           // O(view) per refresh — see IncrementalView)
-          timed("views")(cfg.views.foreach(_.refresh(spark)))
+          cfg.views.foreach(_.refresh(spark))
         } finally classified.unpersist()
       }
       .start()

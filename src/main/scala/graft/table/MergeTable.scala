@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
 import java.util.UUID
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -26,14 +26,14 @@ final case class Snapshot(
     // feed (maintenance ops are layout-only; replacement ops force resync)
     op: String = "merge",
     // Some(n) when this snapshot's data files are EXACTLY a bucketed
-    // layout (hash(key) into n buckets, written by compactBucketed):
+    // layout (hash(key) into n buckets, written by a bucketed rewrite):
     // reads then go through the session catalog's bucket-aware scan, so
     // key joins/aggs need no Exchange. Any later delta clears it.
     buckets: Option[Int] = None,
     // column → file → (lo, hi) as longs: per-FILE value ranges recorded by
-    // compactSorted. Files are immutable, so entries stay true forever and
-    // are inherited across commits (filtered to surviving files) by
-    // commit(); readWhere() uses them for manifest-level file pruning.
+    // the sorted and z-order rewrites. Files are immutable, so entries stay
+    // true forever and are inherited across commits (filtered to surviving
+    // files) by commit(); readWhere() uses them for manifest-level pruning.
     colStats: Map[String, Map[String, (Long, Long)]] = Map.empty,
     // wall-clock commit time (epoch millis), stamped by commit(); 0 on
     // legacy manifests written before the header existed. Drives
@@ -187,32 +187,21 @@ final class MergeTable(
     */
   private def phys(c: String): String = physicalNames.getOrElse(c, c)
 
-  /** The schema as written in data files: physical names, `_seq`, and
-    * the partition column last (directory-partition layout).
+  /** The schema of a data file group as read: physical names, `_seq`,
+    * and the group's directory-partition column `dirKey` (a physical
+    * name) last.
     */
-  private def physFileSchema: StructType = StructType(
-    schema.fields.filterNot(f => partitionCol.contains(f.name))
-      .map(f => f.copy(name = phys(f.name))) ++
-      Seq(StructField(SEQ, LongType)) ++
-      partitionCol.map(p => schema(p).copy(name = phys(p))))
-
-  /** Project a physically-named frame (fresh off a file scan) back to
-    * logical names; identity (and skipped) when nothing is renamed.
-    */
-  private def toLogical(df: DataFrame, extra: Seq[String]): DataFrame =
-    if (physicalNames.isEmpty) df
-    else df.select(payloadCols.map(c => col(phys(c)).as(c)) ++
-      extra.map(col): _*)
-
-  /** Data files land under the CURRENT spec's directory; manifest paths
-    * stay dataDir-relative (the pspec prefix rides in the name, exactly
-    * like the bucketed-v prefix).
-    */
-  private def adoptIntoCurrentSpec(staged: Path, v: Long): Vector[String] = {
-    if (writeSpecId == 0) adoptFiles(staged, dataDir, v)
-    else adoptFiles(staged, dataDir.resolve(s"pspec-$writeSpecId"), v)
-      .map(m => s"pspec-$writeSpecId/$m")
+  private def fileSchema(dirKey: Option[String]): StructType = {
+    val fields = schema.fields.map(f => f.copy(name = phys(f.name)))
+    StructType(fields.filterNot(f => dirKey.contains(f.name)) ++
+      Seq(StructField(SEQ, LongType)) ++ fields.filter(f => dirKey.contains(f.name)))
   }
+
+  /** Where new data files land, relative to the data root: the CURRENT
+    * spec's directory. Manifest paths stay dataDir-relative, with the
+    * pspec prefix in the name, exactly like the bucketed-v prefix.
+    */
+  private val specDir: String = if (writeSpecId == 0) "" else s"pspec-$writeSpecId"
 
   /** (layout prefix, partition dir column) of a manifest file path. The
     * path is self-describing: `bucketed-v7/` / `pspec-2/` prefixes name
@@ -254,14 +243,8 @@ final class MergeTable(
     val dfs = groups.toSeq.sortBy(_._1.toString).map {
       case ((groupRoot, (prefix, dirKey)), fs) =>
         val base = if (prefix.isEmpty) groupRoot else groupRoot.resolve(prefix)
-        val fileSchema = StructType(
-          schema.fields.filterNot(f => dirKey.contains(phys(f.name)))
-            .map(f => f.copy(name = phys(f.name))) ++
-            Seq(StructField(SEQ, LongType)) ++
-            dirKey.flatMap(p => schema.fields.find(f => phys(f.name) == p))
-              .map(f => f.copy(name = phys(f.name))))
         spark.read.option("basePath", base.toString)
-          .schema(fileSchema)
+          .schema(fileSchema(dirKey))
           .parquet(fs.map(f => groupRoot.resolve(f).toString): _*)
           .select(payloadCols.map(c => col(phys(c)).as(c)) :+ col(SEQ): _*)
     }
@@ -477,7 +460,7 @@ final class MergeTable(
     // Inherit per-file column stats from the predecessor, filtered to the
     // files this snapshot still references: files are immutable so the
     // ranges stay true; rewritten-away files drop out here. Explicit stats
-    // (from compactSorted) win on key collision.
+    // (from a sorted or z-order rewrite) win on key collision.
     val s = {
       val present = s0.dataFiles.toSet
       val inherited = currentSnapshot.map(_.colStats).getOrElse(Map.empty)
@@ -490,11 +473,16 @@ final class MergeTable(
     }
     writeManifest(if (s.tsMillis > 0) s
       else s.copy(tsMillis = System.currentTimeMillis()))
-    val tmp = metaRoot.resolve(s".latest.${UUID.randomUUID()}.tmp")
-    Files.writeString(tmp, s.version.toString)
     // Readers resolve the pointer then the manifest — they can never see a
     // partially written snapshot. Monotonic under the lock: cur can't move
     // while we hold it, and s.version > cur was just checked.
+    swingLatest(s.version)
+  }
+
+  /** Atomically point `_latest` at version `v`. */
+  private def swingLatest(v: Long): Unit = {
+    val tmp = metaRoot.resolve(s".latest.${UUID.randomUUID()}.tmp")
+    Files.writeString(tmp, v.toString)
     Files.move(tmp, metaRoot.resolve("_latest"),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
@@ -534,16 +522,9 @@ final class MergeTable(
 
   def create(): this.type = {
     Seq(dataDir, deleteDir, manifestDir).foreach(Files.createDirectories(_))
-    val meta = rootPath.resolve("_table.meta")
-    if (!Files.exists(meta)) {
-      val fallbackLine =
-        if (dataFallbacks.isEmpty) ""
-        else s"datafallback\t${dataFallbacks.mkString(",")}\n"
-      Files.writeString(meta,
-        s"key\t$keyCol\npartition\t${partitionCol.getOrElse("")}\n" +
-          s"threshold\t$deleteCompactThreshold\nschema\t${schema.toDDL}\n" +
-          fallbackLine)
-    }
+    // renames and the spec epoch are written too: a shallow clone of an
+    // evolved table must reopen evolved
+    if (!Files.exists(rootPath.resolve("_table.meta"))) rewriteMeta(schema)
     this
   }
 
@@ -636,21 +617,21 @@ final class MergeTable(
   // ---- write path ----
 
   /** Move every parquet file under `staged` (including partition subdirs)
-    * into `target`, returning target-relative paths.
+    * into `target/sub`, returning target-relative paths.
     */
-  private def adoptFiles(staged: Path, target: Path, v: Long): Vector[String] = {
+  private def adoptFiles(staged: Path, target: Path, v: Long,
+      sub: String = ""): Vector[String] = {
     if (!Files.exists(staged)) return Vector.empty
     val moved = Vector.newBuilder[String]
     val it = Files.walk(staged).iterator().asScala
     it.filter(p => p.toString.endsWith(".parquet") && Files.isRegularFile(p))
       .foreach { f =>
-        val rel = staged.relativize(f.getParent)
+        val rel = Paths.get(sub).resolve(staged.relativize(f.getParent))
         val destDir = target.resolve(rel)
         Files.createDirectories(destDir)
         val name = s"f$v-${UUID.randomUUID().toString.take(12)}.parquet"
         Files.move(f, destDir.resolve(name))
-        val relPath = if (rel.toString.isEmpty) name else s"$rel/$name"
-        moved += relPath
+        moved += rel.resolve(name).toString
       }
     deleteRecursively(staged)
     moved.result()
@@ -662,27 +643,41 @@ final class MergeTable(
     }
   }
 
+  /** Delete files a commit never published (a losing or rejected attempt). */
+  private def discard(data: Seq[String], dels: Seq[String] = Nil): Unit = {
+    data.foreach(f => Files.deleteIfExists(dataDir.resolve(f)))
+    dels.foreach(f => Files.deleteIfExists(deleteDir.resolve(f)))
+  }
+
   private def stagingDir(tag: String, v: Long): Path =
     rootPath.resolve(s".staging-$tag-v$v-${UUID.randomUUID().toString.take(8)}")
 
-  private def writeUpserts(rows: DataFrame, v: Long): Vector[String] = {
+  /** Stage `rows` as the data files of commit `v` and adopt them under
+    * the current spec: physical column names, the `_seq` stamp, and
+    * directory partitions by the partition column. `cluster` lays out the
+    * physically-named frame before the write.
+    */
+  private def writeData(rows: DataFrame, v: Long)(
+      cluster: DataFrame => DataFrame): Vector[String] = {
     val staged = stagingDir("data", v)
     // files carry PHYSICAL names (rename-stable)
     val cols = payloadCols.map(c => col(c).as(phys(c))) :+ lit(v).as(SEQ)
-    // cluster by the partition value first: every task otherwise opens a
-    // file per partition dir it sees (32 tasks × |events| ≈ 200 small
-    // files PER micro-batch — file-open overhead dominated the apply path).
-    // round-14 note: a REBALANCE hint here (guide §6 coalesce-on-write) was
-    // measured and REVERTED — the extra exchange per commit cost more than
-    // the ~31 saved file creates once the sort shuffle writer landed
-    // (q65 3.7→4.3 s, CDC apply rate −15%); at cluster scale the
-    // compaction paths, not the hot commit path, own file sizing.
-    val clustered = partitionCol.fold(rows.select(cols: _*))(p =>
-      rows.select(cols: _*).repartition(col(phys(p))))
-    val w = clustered.write.mode("overwrite").option("compression", "snappy")
+    val w = cluster(rows.select(cols: _*))
+      .write.mode("overwrite").option("compression", "snappy")
     partitionCol.fold(w)(p => w.partitionBy(phys(p))).parquet(staged.toString)
-    adoptIntoCurrentSpec(staged, v)
+    adoptFiles(staged, dataDir, v, specDir)
   }
+
+  // cluster by the partition value first: every task otherwise opens a
+  // file per partition dir it sees (32 tasks × |events| ≈ 200 small
+  // files PER micro-batch — file-open overhead dominated the apply path).
+  // round-14 note: a REBALANCE hint here (guide §6 coalesce-on-write) was
+  // measured and REVERTED — the extra exchange per commit cost more than
+  // the ~31 saved file creates once the sort shuffle writer landed
+  // (q65 3.7→4.3 s, CDC apply rate −15%); at cluster scale the
+  // compaction paths, not the hot commit path, own file sizing.
+  private def writeUpserts(rows: DataFrame, v: Long): Vector[String] =
+    writeData(rows, v)(df => partitionCol.fold(df)(p => df.repartition(col(phys(p)))))
 
   private def writeTombstones(keys: DataFrame, v: Long): Vector[String] = {
     val staged = stagingDir("del", v)
@@ -776,31 +771,9 @@ final class MergeTable(
     */
   def appendWithDeadLetter(rows: DataFrame, deadLetter: MergeTable,
       batchId: Option[String] = None): (Long, Long) = {
-    val cks = checkConstraints.toSeq.sortBy(_._1)
-    if (cks.isEmpty) {
-      val n = rows.count()
-      appendAll(rows, batchId)
-      return (n, 0L)
-    }
-    val flagged = rows.withColumn("_violated", violatedColumn(cks)).persist()
-    try {
-      val clean = flagged.filter(col("_violated").isNull).drop("_violated")
-      val dead = flagged.filter(col("_violated").isNotNull)
-        .withColumnRenamed("_violated", "violated")
-      val nClean = clean.count()
-      val nDead = dead.count()
-      if (nClean > 0) appendAll(clean, batchId.map(_ + "-clean"))
-      if (nDead > 0) deadLetter.appendAll(dead, batchId.map(_ + "-dead"))
-      (nClean, nDead)
-    } finally { flagged.unpersist(blocking = false); () }
+    val (_, nClean, nDead) = splitAppend(rows, deadLetter, batchId, keep = false)
+    (nClean, nDead)
   }
-
-  /** First-failing-constraint column (violation = expression FALSE;
-    * NULL passes, per SQL CHECK) — shared by [[appendWithDeadLetter]]
-    * and [[appendWithDeadLetterKept]] so the two gates can never drift.
-    */
-  private def violatedColumn(cks: Seq[(String, String)]) =
-    coalesce(cks.map { case (n, e) => when(expr(e) === false, lit(n)) }: _*)
 
   /** [[appendWithDeadLetter]] returning the committed CLEAN slice itself
     * (eagerly checkpointed, so it stays consumable after internal caches
@@ -813,18 +786,29 @@ final class MergeTable(
     * getPersistentRDDs diff pattern in a long-running stream).
     */
   def appendWithDeadLetterKept(rows: DataFrame, deadLetter: MergeTable,
-      batchId: Option[String] = None): (DataFrame, Long, Long) = {
+      batchId: Option[String] = None): (DataFrame, Long, Long) =
+    splitAppend(rows, deadLetter, batchId, keep = true)
+
+  /** The one constraint gate behind both dead-letter appends; `keep`
+    * checkpoints the clean slice so it can be handed back.
+    */
+  private def splitAppend(rows: DataFrame, deadLetter: MergeTable,
+      batchId: Option[String], keep: Boolean): (DataFrame, Long, Long) = {
+    def kept(df: DataFrame) = if (keep) df.localCheckpoint(eager = true) else df
     val cks = checkConstraints.toSeq.sortBy(_._1)
     if (cks.isEmpty) {
-      val kept = rows.localCheckpoint(eager = true)
-      val n = kept.count()
-      appendAll(kept, batchId)
-      return (kept, n, 0L)
+      val all = kept(rows)
+      val n = all.count()
+      appendAll(all, batchId)
+      return (all, n, 0L)
     }
-    val flagged = rows.withColumn("_violated", violatedColumn(cks)).persist()
+    // first failing constraint (violation = expression FALSE; NULL
+    // passes, per SQL CHECK)
+    val flagged = rows.withColumn("_violated",
+      coalesce(cks.map { case (n, e) => when(expr(e) === false, lit(n)) }: _*))
+      .persist()
     try {
-      val clean = flagged.filter(col("_violated").isNull).drop("_violated")
-        .localCheckpoint(eager = true)
+      val clean = kept(flagged.filter(col("_violated").isNull).drop("_violated"))
       val dead = flagged.filter(col("_violated").isNotNull)
         .withColumnRenamed("_violated", "violated")
       val nClean = clean.count()
@@ -841,6 +825,15 @@ final class MergeTable(
       .collect().head
     if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
   }
+
+  /** Per-file key stats when every file carries the same `range`. */
+  private def rangeStats(files: Vector[String],
+      range: Option[(Long, Long)]): Map[String, (Long, Long)] =
+    range.fold(Map.empty[String, (Long, Long)])(r => files.map(_ -> r).toMap)
+
+  private def requireBatchId(batchId: Option[String]): Unit =
+    batchId.foreach(id => require(!id.exists(c => c == '\t' || c == '\n'),
+      "batchId must not contain tab/newline (manifest is TSV)"))
 
   /** The replay-dedup ledger: batch ids whose commits have landed on
     * this table. Exposed so a DERIVED table can [[inheritAppliedBatches]].
@@ -879,8 +872,7 @@ final class MergeTable(
     */
   def appendAll(rows: DataFrame, batchId: Option[String] = None): Unit =
     synchronized {
-      batchId.foreach(id => require(!id.exists(c => c == '\t' || c == '\n'),
-        "batchId must not contain tab/newline (manifest is TSV)"))
+      requireBatchId(batchId)
       // replay short-circuit BEFORE the keyRangeOf aggregation: an
       // already-applied batch (checkpoint recovery) must cost zero Spark jobs
       if (batchId.exists(id =>
@@ -917,18 +909,23 @@ final class MergeTable(
             prev.map(_.deleteFiles).getOrElse(Vector.empty),
             prev.map(_.appliedBatches).getOrElse(Set.empty) ++ batchId,
             prev.exists(_.requiresDedup),
-            prev.map(_.fileStats).getOrElse(Map.empty) ++
-              range.fold(Map.empty[String, (Long, Long)])(r => files.map(_ -> r).toMap),
+            prev.map(_.fileStats).getOrElse(Map.empty) ++ rangeStats(files, range),
             op = "append"))
           catch {
             case e: MergeTable.CommitConflictException =>
               // losing attempt's files are unreferenced — reclaim eagerly
-              files.foreach(f => Files.deleteIfExists(dataDir.resolve(f)))
+              discard(files)
               throw e
           }
         }
       }
     }
+
+  /** An observed count; absent (a no-task plan) reads as zero. */
+  private def observed(m: Map[String, Any], name: String): Long = m.get(name) match {
+    case Some(x: Number) => x.longValue()
+    case _               => 0L
+  }
 
   /** Keyed transactional apply — the reference's J1 merge
     * (firehose_to_iceberg.py:109–116): `insert|update` upsert by `keyCol`,
@@ -941,8 +938,7 @@ final class MergeTable(
     */
   def applyBatch(batch: DataFrame, batchId: Option[String] = None): Unit =
     synchronized {
-      batchId.foreach(id => require(!id.exists(c => c == '\t' || c == '\n'),
-        "batchId must not contain tab/newline (manifest is TSV)"))
+      requireBatchId(batchId)
       if (batchId.exists(id =>
           currentSnapshot.exists(_.appliedBatches.contains(id)))) return
 
@@ -997,11 +993,7 @@ final class MergeTable(
             // an empty slice can collapse to a no-task plan that never emits
             // its metrics row — absent metrics mean zero rows
             val um = upObs.get
-            def metric(name: String): Long = um.get(name) match {
-              case Some(x: Long) => x
-              case Some(x: Number) => x.longValue()
-              case _ => 0L
-            }
+            def metric(name: String): Long = observed(um, name)
             val nUpserts = metric("nup")
             val anyUpdates = metric("nupd") > 0
             val batchRange: Option[(Long, Long)] =
@@ -1012,26 +1004,22 @@ final class MergeTable(
             // writes emit 0-row part files from idle tasks — drop them
             val newData =
               if (nUpserts > 0) rawData
-              else { rawData.foreach(f => Files.deleteIfExists(dataDir.resolve(f))); Vector.empty }
+              else { discard(rawData); Vector.empty }
 
             val delObs = org.apache.spark.sql.Observation()
             val rawDels = writeTombstones(
               cached.filter(col("operation") === "delete")
                 .observe(delObs, count(lit(1)).as("ndel")), v)
-            val nDels = delObs.get.get("ndel") match {
-              case Some(x: Number) => x.longValue()
-              case _               => 0L
-            }
+            val nDels = observed(delObs.get, "ndel")
             val newDels =
               if (nDels > 0) rawDels
-              else { rawDels.foreach(f => Files.deleteIfExists(deleteDir.resolve(f))); Vector.empty }
+              else { discard(Nil, rawDels); Vector.empty }
 
             // reject-whole-batch BEFORE commit: staged files reclaimed, the
             // snapshot never advances, the table is byte-identical
             val ckCounts = cks.indices.map(i => metric(s"_ck$i"))
             if (ckCounts.exists(_ > 0)) {
-              newData.foreach(f => Files.deleteIfExists(dataDir.resolve(f)))
-              newDels.foreach(f => Files.deleteIfExists(deleteDir.resolve(f)))
+              discard(newData, newDels)
               failOnViolations(cks, ckCounts)
             }
 
@@ -1042,16 +1030,14 @@ final class MergeTable(
               prev.map(_.appliedBatches).getOrElse(Set.empty) ++ batchId,
               prev.exists(_.requiresDedup) || anyUpdates || newDels.nonEmpty,
               prev.map(_.fileStats).getOrElse(Map.empty) ++
-                batchRange.fold(Map.empty[String, (Long, Long)])(r =>
-                  newData.map(_ -> r).toMap)))
+                rangeStats(newData, batchRange)))
             catch {
               case e: MergeTable.CommitConflictException =>
                 // the losing attempt's files are unreferenced (its _seq
                 // stamp belongs to the slot the winner took) — reclaim
                 // eagerly; the retry re-runs the merge against the fresh
                 // head with a fresh stamp
-                newData.foreach(f => Files.deleteIfExists(dataDir.resolve(f)))
-                newDels.foreach(f => Files.deleteIfExists(deleteDir.resolve(f)))
+                discard(newData, newDels)
                 throw e
             }
           }
@@ -1064,8 +1050,8 @@ final class MergeTable(
           // auto-compaction is opportunistic maintenance: losing a commit
           // race to a concurrent writer must not fail the micro-batch that
           // triggered it — the threshold is still exceeded, so the next
-          // batch re-triggers; any files the losing rewrite staged are
-          // unreferenced and fall to removeOrphanFiles
+          // batch re-triggers; the losing rewrite already deleted what it
+          // staged
           case _: MergeTable.CommitConflictException => ()
         }
     }
@@ -1077,22 +1063,21 @@ final class MergeTable(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   /** Current-snapshot read (or time travel via `asOfVersion`). */
-  def read(spark: SparkSession, asOfVersion: Option[Long] = None): DataFrame = {
-    val snapOpt = asOfVersion.map(readManifest).orElse(currentSnapshot)
-    snapOpt match {
-      case None                                 => emptyDf(spark)
-      case Some(snap) if snap.dataFiles.isEmpty => emptyDf(spark)
-      case Some(snap) if snap.buckets.isDefined =>
-        // bucket-aware scan via the session catalog: outputPartitioning =
-        // HashPartitioning(key, n), so downstream key joins/aggs skip the
-        // Exchange entirely (bucketed snapshots are compacted → no merge)
-        ensureBucketTable(spark, snap)
-        val t = spark.table(bucketTableName(snap.version))
-        if (physicalNames.isEmpty) t.select(payloadCols.map(col): _*)
-        else t.select(payloadCols.map(c => col(phys(c)).as(c)): _*)
-      case Some(snap)                           => readSnapshot(spark, snap)
-    }
-  }
+  def read(spark: SparkSession, asOfVersion: Option[Long] = None): DataFrame =
+    asOfVersion.map(readManifest).orElse(currentSnapshot)
+      .fold(emptyDf(spark))(readAt(spark, _))
+
+  private def readAt(spark: SparkSession, snap: Snapshot): DataFrame =
+    if (snap.dataFiles.isEmpty) emptyDf(spark)
+    else if (snap.buckets.isDefined) {
+      // bucket-aware scan via the session catalog: outputPartitioning =
+      // HashPartitioning(key, n), so downstream key joins/aggs skip the
+      // Exchange entirely (bucketed snapshots are compacted → no merge)
+      ensureBucketTable(spark, snap)
+      val t = spark.table(bucketTableName(snap.version))
+      if (physicalNames.isEmpty) t.select(payloadCols.map(col): _*)
+      else t.select(payloadCols.map(c => col(phys(c)).as(c)): _*)
+    } else readSnapshot(spark, snap)
 
   private def bucketTableName(v: Long): String =
     s"graft_bkt_${Integer.toHexString(root.hashCode)}_v$v"
@@ -1107,10 +1092,9 @@ final class MergeTable(
     if (!spark.catalog.tableExists(tbl)) {
       // catalog entry speaks PHYSICAL names (matches the files; rename-
       // stable, so a post-rename session reuses a pre-rename entry)
-      val fileSchema = physFileSchema
       val partClause = partitionCol.fold("")(p => s"PARTITIONED BY (${phys(p)})")
       spark.sql(
-        s"""CREATE TABLE $tbl (${fileSchema.toDDL})
+        s"""CREATE TABLE $tbl (${fileSchema(partitionCol.map(phys)).toDDL})
            USING PARQUET
            $partClause
            CLUSTERED BY (${phys(keyCol)}) SORTED BY (${phys(keyCol)}) INTO ${snap.buckets.get} BUCKETS
@@ -1120,110 +1104,234 @@ final class MergeTable(
     }
   }
 
-  /** Compaction variant producing a BUCKETED layout: the merged state is
-    * hash-clustered by the merge key into `nBuckets` catalog-registered
-    * bucket files, so until the next delta commit every key-equi join or
-    * aggregation over `read()` compiles with ZERO exchanges (the 100 TB
-    * fact-fact join layout — see ScalePatterns.writeBucketed for the
-    * catalog-table analog). Later merge/append commits clear the bucket
-    * flag (their files aren't bucket-pure) and reads fall back to the
-    * path-based merge view; the next compactBucketed re-buckets.
-    * Bucketed layouts are dir-partition-free by design: bucket locality
-    * and partition pruning pull the layout in different directions, and
-    * this variant chooses join locality (partition-pruned workloads keep
-    * `compact()`).
+  // ---- rewrite: table maintenance (Iceberg's rewrite_data_files) ----
+
+  /** Rewrite the current snapshot's data files under strategy `how` as
+    * ONE layout-only commit (`op = "binpack"` for BinPack, `"compact"`
+    * otherwise): every key reads the same before and after, and the
+    * change feed emits nothing for it. One skeleton serves every
+    * strategy: read the head and propose the next version; let the
+    * strategy pick the files it rewrites (the rest are carried
+    * untouched); materialize them, cached because the layout step reads
+    * them more than once; let the strategy lay them out; commit.
+    * Superseded files stay on disk for older retained snapshots (time
+    * travel, rollback, lagging feed consumers) until `expireSnapshots` —
+    * the Iceberg rewrite/expire split. A rewrite that loses the commit
+    * race deletes what it staged and rethrows the conflict: its intent
+    * against a moved head is the caller's to re-issue.
     */
-  def compactBucketed(spark: SparkSession, nBuckets: Int = 16): Unit =
-    synchronized {
-      require(nBuckets > 0)
-      require(branchName.isEmpty, "compactBucketed runs on main only " +
-        "(the bucketed-v<N> layout dir is keyed by main-chain versions)")
-      val prev = currentSnapshot.getOrElse(return)
-      val v = prev.version + 1
-      val materialized = read(spark).cache()
-      try {
-        val range = keyRangeOf(materialized)
-        val tbl = bucketTableName(v)
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        // keep the dir-partition layout (if any) so a later DELTA commit's
-        // partitioned files and these bucket files read uniformly by path
-        val writer = materialized
-          .select(payloadCols.map(c => col(c).as(phys(c))) :+ lit(v).as(SEQ): _*)
-          .repartition(nBuckets, col(phys(keyCol)))
-          .write.mode("overwrite")
-          .bucketBy(nBuckets, phys(keyCol)).sortBy(phys(keyCol))
-          .option("path", bucketDir(v).toString)
-          .format("parquet")
-        partitionCol.fold(writer)(p => writer.partitionBy(phys(p))).saveAsTable(tbl)
-        val files = withDirStream(Files.walk(bucketDir(v)))(
-          _.iterator().asScala
-            .filter(p => p.toString.endsWith(".parquet") && Files.isRegularFile(p))
-            .map(p => s"bucketed-v$v/${bucketDir(v).relativize(p)}")
-            .toVector.sorted)
-        commit(Snapshot(v, files, Vector.empty, prev.appliedBatches,
-          requiresDedup = false,
-          range.fold(Map.empty[String, (Long, Long)])(r => files.map(_ -> r).toMap),
-          op = "compact", buckets = Some(nBuckets)))
-        // Superseded files stay on disk: older retained snapshots still
-        // reference them (time travel, rollback, lagging feed consumers);
-        // expireSnapshots physically deletes them once no retained manifest
-        // does — the same rewrite/expire split as compact()/compactScoped().
-      } finally materialized.unpersist()
+  def rewrite(spark: SparkSession, how: MergeTable.Rewrite): Unit = synchronized {
+    import MergeTable.Rewrite._
+    val statCols = how match {
+      case Sorted(c, _) => Seq(c)
+      case ZOrder(cs, _) =>
+        require(cs.size >= 2 && cs.size <= 3, "z-order supports 2-3 columns " +
+          "(1 → Sorted; >3 → 16-bit ranks overflow the long)")
+        cs
+      case Bucketed(n) =>
+        require(n > 0)
+        require(branchName.isEmpty, "a bucketed rewrite runs on main only " +
+          "(the bucketed-v<N> layout dir is keyed by main-chain versions)")
+        Nil
+      case _ => Nil
+    }
+    // per-file stats are kept as longs via an order-preserving cast
+    statCols.foreach { c =>
+      require(payloadCols.contains(c), s"no such column $c")
+      require(!partitionCol.contains(c),
+        s"$c is the partition column, already dir-pruned; pick another column")
+      require(MergeTable.StatTypes.contains(schema(c).dataType),
+        s"stat column $c must be integral or timestamp, got ${schema(c).dataType}")
     }
 
-  private def withDirStream[A, B](s: java.util.stream.Stream[A])(
-      f: java.util.stream.Stream[A] => B): B =
-    try f(s) finally s.close()
-
-  /** Compaction variant producing a SORT-ORDERED layout (Iceberg sort
-    * orders / Z-order-lite for one dimension): the merged state is
-    * range-partitioned and sorted by `sortBy`, so each output file covers
-    * a narrow value range. Per-FILE (min, max) of both `sortBy` and the
-    * merge key are recorded in the manifest: `readWhere` prunes files
-    * before any scan task is planned, `lookup` gets per-file (instead of
-    * per-commit) key bounds, and parquet row-group stats inside each file
-    * are tight for pushed-down range predicates. At 100 TB this is the
-    * layout for time/range-predicate workloads — the analog of
-    * compactBucketed's join-locality layout (the two pull in different
-    * directions; pick per table).
-    *
-    * `sortBy` must be integral or timestamp (stats are kept as longs via
-    * an order-preserving cast). Column ranges survive later delta commits
-    * (files are immutable) but `readWhere` then falls back to the merged
-    * view — see its contract.
-    */
-  def compactSorted(spark: SparkSession, sortBy: String,
-      targetFiles: Int = 32): Unit = synchronized {
-    require(payloadCols.contains(sortBy), s"no such column $sortBy")
-    require(!partitionCol.contains(sortBy),
-      "partition column is already dir-pruned; pick a different sort column")
-    val okTypes: Set[org.apache.spark.sql.types.DataType] = Set(LongType,
-      org.apache.spark.sql.types.IntegerType,
-      org.apache.spark.sql.types.TimestampType)
-    require(okTypes.contains(schema(sortBy).dataType),
-      s"sort column must be integral or timestamp, got ${schema(sortBy).dataType}")
     val prev = currentSnapshot.getOrElse(return)
+    onBaseSnapshotRead()
     val v = prev.version + 1
-    val materialized = read(spark).cache()
+    val targets: Vector[String] = how match {
+      case Scoped =>
+        if (!prev.requiresDedup && prev.deleteFiles.isEmpty) return
+        scopedTargets(spark, prev)
+      case BinPack(maxFiles) =>
+        // a bucketed snapshot is already exactly nBuckets files, and packing
+        // would break the bucket-id file naming the catalog scan relies on
+        if (prev.buckets.isDefined) return
+        val small = prev.dataFiles.groupBy(dirOf).values
+          .filter(_.size > maxFiles).flatten.toVector
+        if (small.isEmpty) return
+        small
+      case _ => prev.dataFiles
+    }
+    val pack = how.isInstanceOf[BinPack]
+    val targetSet = targets.toSet
+    val kept = prev.dataFiles.filterNot(targetSet)
+    // Bin-packing concatenates files as they are. Every other strategy
+    // rewrites the merged state of its targets: the whole snapshot, or a
+    // scoped subset whose collisions and tombstones all resolve inside it.
+    val materialized =
+      if (pack || targets.isEmpty) None
+      else Some((if (kept.isEmpty) readAt(spark, prev)
+        else readSnapshot(spark,
+          prev.copy(dataFiles = targets, requiresDedup = true))).cache())
     try {
-      val staged = stagingDir("data", v)
-      val cols = payloadCols.map(c => col(c).as(phys(c))) :+ lit(v).as(SEQ)
-      val clustered = materialized.select(cols: _*)
-        .repartitionByRange(targetFiles, col(phys(sortBy)), col(phys(keyCol)))
-        .sortWithinPartitions(col(phys(sortBy)), col(phys(keyCol)))
-      val w = clustered.write.mode("overwrite").option("compression", "snappy")
-      partitionCol.fold(w)(p => w.partitionBy(phys(p))).parquet(staged.toString)
-      val files = adoptIntoCurrentSpec(staged, v)
-      val (keyStats, colStats) = statsReadback(spark, files, Seq(sortBy))
-      commit(Snapshot(v, files, Vector.empty, prev.appliedBatches,
-        requiresDedup = false, keyStats, op = "compact", colStats = colStats))
-      // superseded files reclaimed by expireSnapshots (rewrite/expire split)
-    } finally materialized.unpersist()
+      val out = (how, materialized) match {
+        case (BinPack(_), _) => packDirs(spark, prev, targets, v)
+        // scoped, nothing dirty: metadata-only, the commit clears the debt
+        case (_, None) => MergeTable.Written(Vector.empty, Map.empty)
+        case (Sorted(c, n), Some(in)) =>
+          writeRangeClustered(spark, in, v, n, col(phys(c)), statCols)
+        case (ZOrder(cs, n), Some(in)) =>
+          writeRangeClustered(spark, in, v, n, zValue(in, cs), statCols)
+        case (_, Some(in)) => // merge-all, scoped, bucketed
+          val range = keyRangeOf(in) // cached — cheap agg, no re-scan
+          val buckets = Some(how).collect { case Bucketed(n) => n }
+          val files = buckets.fold(writeUpserts(in, v))(writeBucketed(spark, in, v, _))
+          MergeTable.Written(files, rangeStats(files, range), buckets = buckets)
+      }
+      try commit(Snapshot(v, kept ++ out.files,
+        if (pack) prev.deleteFiles else Vector.empty, prev.appliedBatches,
+        requiresDedup = pack && prev.requiresDedup,
+        prev.fileStats.filter(kv => !targetSet(kv._1)) ++ out.keyStats,
+        op = if (pack) "binpack" else "compact",
+        buckets = out.buckets, colStats = out.colStats))
+      catch {
+        case e: MergeTable.CommitConflictException =>
+          // the losing rewrite's files are unreferenced — reclaim eagerly
+          if (out.buckets.isDefined) {
+            spark.sql(s"DROP TABLE IF EXISTS ${bucketTableName(v)}")
+            deleteRecursively(bucketDir(v))
+          } else discard(out.files)
+          throw e
+      }
+    } finally materialized.foreach(_.unpersist())
+  }
+
+  /** The MoR→RoR maintenance the reference configures via
+    * `optimize_rewrite_delete_file_threshold` (README.md:307).
+    */
+  def compact(spark: SparkSession): Unit = rewrite(spark, MergeTable.Rewrite.MergeAll)
+
+  /** What `applyBatch` runs once pending delete files reach the threshold. */
+  def compactScoped(spark: SparkSession): Unit = rewrite(spark, MergeTable.Rewrite.Scoped)
+
+  private def dirOf(f: String): String = f.lastIndexOf('/') match {
+    case -1 => ""
+    case i  => f.substring(0, i)
+  }
+
+  /** The scoped sweep: the data files that can hold a tombstoned key or
+    * that share their key range with a file from a DIFFERENT commit —
+    * every file when per-file key stats are missing (non-integral key).
+    *
+    * Correctness: files written by one commit are mutually key-unique
+    * (every write path LWW-dedupes or merges before writing), so only
+    * range overlap ACROSS commits can mean a duplicated key, and only a
+    * range overlap with a tombstone can mean a deletable row. "Clean"
+    * files have neither, and so can't be changed by the merge; every
+    * remaining collision and every tombstone resolves inside the
+    * returned subset, which is why the commit may clear all delete files
+    * and `requiresDedup`.
+    */
+  private def scopedTargets(spark: SparkSession, prev: Snapshot): Vector[String] = {
+    if (!prev.dataFiles.forall(prev.fileStats.contains)) return prev.dataFiles
+
+    // tombstone key ranges, one per delete file (tombstones are tiny)
+    val tombRanges: Seq[(Long, Long)] =
+      if (prev.deleteFiles.isEmpty) Nil
+      else spark.read
+        .parquet(prev.deleteFiles.map(f => delPath(f).toString): _*)
+        .groupBy(input_file_name())
+        .agg(min(col(phys(keyCol))).as("lo"), max(col(phys(keyCol))).as("hi"))
+        .collect().map(r => (r.getLong(1), r.getLong(2))).toSeq
+
+    val commitOf: String => Long = { f =>
+      val base = f.substring(f.lastIndexOf('/') + 1)
+      "^f(\\d+)-".r.findFirstMatchIn(base).map(_.group(1).toLong).getOrElse(-1L)
+    }
+    // sweep files in key order into range-overlap clusters (lo, hi,
+    // files); a cluster is dirty iff it spans >=2 commits (possible
+    // duplicated keys) or overlaps a tombstone range (possible deleted rows)
+    val clusters = prev.dataFiles.sortBy(prev.fileStats)
+      .foldLeft(List.empty[(Long, Long, List[String])]) { (acc, f) =>
+        val (lo, hi) = prev.fileStats(f)
+        acc match {
+          case (cLo, cHi, fs) :: rest if lo <= cHi => (cLo, cHi max hi, f :: fs) :: rest
+          case _ => (lo, hi, List(f)) :: acc
+        }
+      }
+    val affected: Set[String] = clusters.flatMap { case (lo, hi, fs) =>
+      val dirty = fs.map(commitOf).distinct.size > 1 ||
+        tombRanges.exists(t => t._1 <= hi && t._2 >= lo)
+      if (dirty) fs else Nil
+    }.toSet
+    prev.dataFiles.filter(affected)
+  }
+
+  /** The bucketed layout, under `bucketed-v<v>/` and in the catalog. */
+  private def writeBucketed(spark: SparkSession, in: DataFrame, v: Long,
+      nBuckets: Int): Vector[String] = {
+    val tbl = bucketTableName(v)
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    // keep the dir-partition layout (if any) so a later DELTA commit's
+    // partitioned files and these bucket files read uniformly by path
+    val writer = in
+      .select(payloadCols.map(c => col(c).as(phys(c))) :+ lit(v).as(SEQ): _*)
+      .repartition(nBuckets, col(phys(keyCol)))
+      .write.mode("overwrite")
+      .bucketBy(nBuckets, phys(keyCol)).sortBy(phys(keyCol))
+      .option("path", bucketDir(v).toString)
+      .format("parquet")
+    partitionCol.fold(writer)(p => writer.partitionBy(phys(p))).saveAsTable(tbl)
+    withDirStream(Files.walk(bucketDir(v)))(
+      _.iterator().asScala
+        .filter(p => p.toString.endsWith(".parquet") && Files.isRegularFile(p))
+        .map(p => s"bucketed-v$v/${bucketDir(v).relativize(p)}")
+        .toVector.sorted)
+  }
+
+  /** The sorted and z-order layouts: `in` range-partitioned into
+    * `targetFiles` files by `by` (then the key) and sorted within each,
+    * so each file covers a narrow range of `statCols`; their per-file
+    * ranges are read back for the manifest.
+    */
+  private def writeRangeClustered(spark: SparkSession, in: DataFrame, v: Long,
+      targetFiles: Int, by: Column, statCols: Seq[String]): MergeTable.Written = {
+    val files = writeData(in, v)(_.withColumn("_z", by)
+      .repartitionByRange(targetFiles, col("_z"), col(phys(keyCol)))
+      .sortWithinPartitions(col("_z"), col(phys(keyCol)))
+      .drop("_z"))
+    val (keyStats, colStats) = statsReadback(spark, files, statCols)
+    MergeTable.Written(files, keyStats, colStats)
+  }
+
+  /** Z-order value of `zCols` on the physically-named frame: each column
+    * min-max-normalized to 16-bit ranks (bounds from one global agg over
+    * the cached input), then bit-interleaved. Linear normalization is
+    * skew-sensitive but deterministic and one pass; heavily skewed
+    * dimensions prefer a sorted rewrite on the dominant column.
+    */
+  private def zValue(in: DataFrame, zCols: Seq[String]): Column = {
+    val bits = 16
+    val boundAggs = zCols.zipWithIndex.flatMap { case (c, i) =>
+      Seq(min(col(c).cast("long")).as(s"lo$i"), max(col(c).cast("long")).as(s"hi$i"))
+    }
+    val b = in.agg(boundAggs.head, boundAggs.tail: _*).collect().head
+    zCols.zipWithIndex.map { case (c, i) =>
+      val (lo, hi) = (if (b.isNullAt(2 * i)) 0L else b.getLong(2 * i),
+        if (b.isNullAt(2 * i + 1)) 0L else b.getLong(2 * i + 1))
+      val span = math.max(1L, hi - lo)
+      // rank in [0, 2^bits): (x - lo) * (2^bits - 1) / span, null → 0
+      val rank = coalesce(((col(phys(c)).cast("long") - lo)
+        * ((1L << bits) - 1) / span).cast("long"), lit(0L))
+      // spread rank bits to positions i, i+d, i+2d, ... (interleave)
+      (0 until bits).map { bit =>
+        shiftleft(shiftright(rank, bit) % 2, bit * zCols.size + i)
+      }.reduce(_ + _)
+    }.reduce(_ + _)
   }
 
   /** Per-file (min, max) read-back for `cols` (order-preserving long
     * casts) plus the merge key: one bounded, column-pruned scan of the
-    * files just written by a compaction (which already paid the full
+    * files just written by a rewrite (which already paid the full
     * rewrite). Files with all-null values for a column simply carry no
     * stats for it (conservatively included by pruning).
     */
@@ -1239,8 +1347,7 @@ final class MergeTable(
     }
     // stats read-back always follows a compaction: the files are all
     // freshly written under the CURRENT spec, so one basePath suffices
-    val statsBase =
-      if (writeSpecId == 0) dataDir else dataDir.resolve(s"pspec-$writeSpecId")
+    val statsBase = dataDir.resolve(specDir)
     val statRows = spark.read
       .option("basePath", statsBase.toString)
       .parquet(files.map(f => dataDir.resolve(f).toString): _*)
@@ -1264,80 +1371,41 @@ final class MergeTable(
     (keyStats, colStats)
   }
 
-  /** Z-order compaction: the merged state clustered by the interleaved-
-    * bit value of `zCols` (each column min-max-normalized to 16-bit ranks
-    * — one global agg — then bit-interleaved), so files are locality-
-    * preserving in EVERY listed dimension and the manifest records
-    * per-file ranges for each. `readWhere` on any of the columns then
-    * prunes files; the multi-dimensional analog of [[compactSorted]]
-    * (Iceberg's zorder rewrite strategy). Linear normalization is
-    * skew-sensitive but deterministic and computed in one pass; heavily
-    * skewed dimensions prefer `compactSorted` on the dominant column.
+  /** The bin-pack layout: each directory's `files` concatenated into one
+    * fresh file there, read WITH `_seq` and written back as-is. A packed
+    * file's key range is the union of its sources' ranges (no re-scan);
+    * a group with any stat-less member stays stat-less.
     */
-  def compactZOrder(spark: SparkSession, zCols: Seq[String],
-      targetFiles: Int = 32): Unit = synchronized {
-    require(zCols.size >= 2 && zCols.size <= 3,
-      "z-order supports 2-3 columns (1 → compactSorted; >3 → 16-bit ranks overflow the long)")
-    val okTypes: Set[org.apache.spark.sql.types.DataType] = Set(LongType,
-      org.apache.spark.sql.types.IntegerType,
-      org.apache.spark.sql.types.TimestampType)
-    zCols.foreach { c =>
-      require(payloadCols.contains(c), s"no such column $c")
-      require(!partitionCol.contains(c), s"$c is the partition column")
-      require(okTypes.contains(schema(c).dataType),
-        s"z-order column must be integral or timestamp, got ${schema(c).dataType}")
+  private def packDirs(spark: SparkSession, prev: Snapshot,
+      files: Vector[String], v: Long): MergeTable.Written = {
+    val packed = files.groupBy(dirOf).toSeq.map { case (dir, group) =>
+      val staged = stagingDir("pack", v)
+      // The group's byte schema excludes ITS OWN layout's dir column
+      // (derived from the path — files from an older partition-spec epoch
+      // carry a different dir key than the current spec)
+      val (_, dirKey) = layoutOf(group.head)
+      spark.read
+        .schema(StructType(fileSchema(dirKey).filterNot(f => dirKey.contains(f.name))))
+        .parquet(group.map(f => dataPath(f).toString): _*)
+        .coalesce(1)
+        .write.mode("overwrite").option("compression", "snappy")
+        .parquet(staged.toString)
+      // adopted into the source dir: directory-partition discovery holds
+      val placed = adoptFiles(staged, dataDir, v, dir)
+      val ranges = group.flatMap(prev.fileStats.get)
+      val range =
+        if (ranges.size == group.size && ranges.nonEmpty)
+          Some((ranges.map(_._1).min, ranges.map(_._2).max))
+        else None
+      (placed, rangeStats(placed, range))
     }
-    val bits = 16
-    val prev = currentSnapshot.getOrElse(return)
-    val v = prev.version + 1
-    val materialized = read(spark).cache()
-    try {
-      // one global agg for normalization bounds (cached input, cheap)
-      val boundAggs = zCols.zipWithIndex.flatMap { case (c, i) =>
-        Seq(min(col(c).cast("long")).as(s"lo$i"), max(col(c).cast("long")).as(s"hi$i"))
-      }
-      val b = materialized.agg(boundAggs.head, boundAggs.tail: _*).collect().head
-      val zExpr = zCols.zipWithIndex.map { case (c, i) =>
-        val (lo, hi) = (if (b.isNullAt(2 * i)) 0L else b.getLong(2 * i),
-          if (b.isNullAt(2 * i + 1)) 0L else b.getLong(2 * i + 1))
-        val span = math.max(1L, hi - lo)
-        // rank in [0, 2^bits): (x - lo) * (2^bits - 1) / span, null → 0
-        // (phys: evaluated on the physically-named frame below)
-        val rank = coalesce(((col(phys(c)).cast("long") - lo)
-          * ((1L << bits) - 1) / span).cast("long"), lit(0L))
-        // spread rank bits to positions i, i+d, i+2d, ... (interleave)
-        (0 until bits).map { bit =>
-          shiftleft(shiftright(rank, bit) % 2, bit * zCols.size + i)
-        }.reduce(_ + _)
-      }.reduce(_ + _)
-
-      val staged = stagingDir("data", v)
-      val cols = payloadCols.map(c => col(c).as(phys(c))) :+ lit(v).as(SEQ)
-      val clustered = materialized.select(cols: _*)
-        .withColumn("_z", zExpr)
-        .repartitionByRange(targetFiles, col("_z"), col(phys(keyCol)))
-        .sortWithinPartitions(col("_z"), col(phys(keyCol)))
-        .drop("_z")
-      val w = clustered.write.mode("overwrite").option("compression", "snappy")
-      partitionCol.fold(w)(p => w.partitionBy(phys(p))).parquet(staged.toString)
-      val files = adoptIntoCurrentSpec(staged, v)
-      val (keyStats, colStats) = statsReadback(spark, files, zCols)
-      commit(Snapshot(v, files, Vector.empty, prev.appliedBatches,
-        requiresDedup = false, keyStats, op = "compact", colStats = colStats))
-    } finally materialized.unpersist()
+    MergeTable.Written(packed.flatMap(_._1).toVector, packed.flatMap(_._2).toMap)
   }
 
-  /** Range read with manifest-level data skipping: rows of the current
-    * snapshot whose `column` (order-preserving long cast) lies in
-    * [lo, hi]. When the snapshot is a pure scan (no pending merge work —
-    * the state every compaction restores), data files whose recorded
-    * range cannot intersect are pruned BEFORE planning; files without
-    * stats are conservatively included. Otherwise falls back to the full
-    * merged read with the same filter — identical results, no skipping.
-    * (Pruning under pending merge-on-read work would be wrong: an update
-    * can move a key's sort value across file ranges, and last-write-wins
-    * must see both copies.)
-    */
+  private def withDirStream[A, B](s: java.util.stream.Stream[A])(
+      f: java.util.stream.Stream[A] => B): B =
+    try f(s) finally s.close()
+
   // ---- bloom file-skip index (point-lookup data skipping on a
   //      NON-key column, where fileStats/colStats ranges don't help) ----
 
@@ -1433,36 +1501,48 @@ final class MergeTable(
     * on top; pending merge work / deletes / bucketed layouts fall back
     * to the plain filtered read (same guards as [[readWhere]]).
     */
-  def lookupBloom(spark: SparkSession, column: String,
-      value: Any): DataFrame = {
-    val pred = col(column) === lit(value)
+  def lookupBloom(spark: SparkSession, column: String, value: Any): DataFrame =
+    prunedRead(spark, col(column) === lit(value))(
+      bloomPrunedFilesFor(spark, column, value, _))
+
+  /** `read().filter(pred)` scanning only the files `wanted` keeps, when
+    * the current snapshot is a pure scan (no pending merge work, no
+    * deletes, not bucketed); otherwise the plain filtered read.
+    */
+  private def prunedRead(spark: SparkSession, pred: Column)(
+      wanted: Snapshot => Seq[String]): DataFrame =
     currentSnapshot match {
       case None => emptyDf(spark)
       case Some(snap)
           if !snap.requiresDedup && snap.deleteFiles.isEmpty
             && snap.buckets.isEmpty =>
-        val wanted = bloomPrunedFilesFor(spark, column, value, snap).toVector
-        if (wanted.isEmpty) emptyDf(spark).filter(pred)
-        else readSnapshot(spark, snap.copy(dataFiles = wanted)).filter(pred)
+        val files = wanted(snap).toVector
+        if (files.isEmpty) emptyDf(spark).filter(pred)
+        else readSnapshot(spark, snap.copy(dataFiles = files)).filter(pred)
       case _ => read(spark).filter(pred)
     }
+
+  /** Files whose `column` range can meet [lo, hi]; stat-less ones too. */
+  private def filesInRange(snap: Snapshot, column: String, lo: Long, hi: Long): Seq[String] = {
+    val stats = snap.colStats.getOrElse(phys(column), Map.empty)
+    snap.dataFiles.filter(f =>
+      stats.get(f).forall { case (l, h) => h >= lo && l <= hi })
   }
 
-  def readWhere(spark: SparkSession, column: String, lo: Long, hi: Long): DataFrame = {
-    val pred = col(column).cast("long").between(lo, hi)
-    currentSnapshot match {
-      case None => emptyDf(spark)
-      case Some(snap)
-          if !snap.requiresDedup && snap.deleteFiles.isEmpty
-            && snap.buckets.isEmpty =>
-        val stats = snap.colStats.getOrElse(phys(column), Map.empty)
-        val wanted = snap.dataFiles.filter(f =>
-          stats.get(f).forall { case (l, h) => h >= lo && l <= hi })
-        if (wanted.isEmpty) emptyDf(spark).filter(pred)
-        else readSnapshot(spark, snap.copy(dataFiles = wanted)).filter(pred)
-      case _ => read(spark).filter(pred)
-    }
-  }
+  /** Range read with manifest-level data skipping: rows of the current
+    * snapshot whose `column` (order-preserving long cast) lies in
+    * [lo, hi]. When the snapshot is a pure scan (no pending merge work —
+    * the state every compaction restores), data files whose recorded
+    * range cannot intersect are pruned BEFORE planning; files without
+    * stats are conservatively included. Otherwise falls back to the full
+    * merged read with the same filter — identical results, no skipping.
+    * (Pruning under pending merge work would be wrong: an update can
+    * move a key's sort value across file ranges, and last-write-wins
+    * must see both copies.)
+    */
+  def readWhere(spark: SparkSession, column: String, lo: Long, hi: Long): DataFrame =
+    prunedRead(spark, col(column).cast("long").between(lo, hi))(
+      filesInRange(_, column, lo, hi))
 
   /** Multi-column manifest pruning for the SQL read path: given per-column
     * [lo, hi] bounds (long space, conjunctive), return a read over only
@@ -1497,9 +1577,7 @@ final class MergeTable(
   private[graft] def prunedFilesFor(column: String, lo: Long, hi: Long): Seq[String] =
     currentSnapshot match {
       case Some(snap) if !snap.requiresDedup && snap.deleteFiles.isEmpty =>
-        val stats = snap.colStats.getOrElse(phys(column), Map.empty)
-        snap.dataFiles.filter(f =>
-          stats.get(f).forall { case (l, h) => h >= lo && l <= hi })
+        filesInRange(snap, column, lo, hi)
       case Some(snap) => snap.dataFiles
       case None       => Seq.empty
     }
@@ -1705,8 +1783,7 @@ final class MergeTable(
     */
   def overwrite(rows: DataFrame, batchId: Option[String] = None): Unit =
     synchronized {
-      batchId.foreach(id => require(!id.exists(c => c == '\t' || c == '\n'),
-        "batchId must not contain tab/newline (manifest is TSV)"))
+      requireBatchId(batchId)
       val prev = currentSnapshot
       if (batchId.exists(id => prev.exists(_.appliedBatches.contains(id)))) return
       val v = prev.map(_.version).getOrElse(-1L) + 1
@@ -1714,9 +1791,7 @@ final class MergeTable(
       val files = writeUpserts(rows, v)
       commit(Snapshot(v, files, Vector.empty,
         prev.map(_.appliedBatches).getOrElse(Set.empty) ++ batchId,
-        requiresDedup = false,
-        range.fold(Map.empty[String, (Long, Long)])(r => files.map(_ -> r).toMap),
-        op = "overwrite"))
+        requiresDedup = false, rangeStats(files, range), op = "overwrite"))
     }
 
   /** Filtered overwrite (`INSERT OVERWRITE ... PARTITION (p = 'x')`):
@@ -2100,88 +2175,6 @@ final class MergeTable(
       .getOrElse(emptyOut)
   }
 
-  /** Bin-pack small files: partitions whose file count exceeds
-    * `maxFilesPerPartition` get their files concatenated into fresh ones.
-    * NO dedup and NO shuffle — every row keeps its `_seq`, so last-write-
-    * wins and tombstone semantics are untouched; this is pure layout
-    * maintenance (the Iceberg rewrite-data-files analog) and is safe to
-    * run any time, unlike `compact()` which materializes the merge.
-    * Streaming tables need this: every micro-batch adds ≥1 file per
-    * touched partition, and a day of 1-minute batches is 1440 small files.
-    */
-  def binPack(spark: SparkSession, maxFilesPerPartition: Int = 8): Unit =
-    synchronized {
-      val prev = currentSnapshot.getOrElse(return)
-      // a bucketed snapshot is already exactly nBuckets files, and packing
-      // would break the bucket-id file naming the catalog scan relies on
-      if (prev.buckets.isDefined) return
-      val byDir = prev.dataFiles.groupBy(f =>
-        f.lastIndexOf('/') match {
-          case -1 => ""
-          case i  => f.substring(0, i)
-        })
-      val toRewrite = byDir.filter(_._2.size > maxFilesPerPartition)
-      if (toRewrite.isEmpty) return
-      val v = prev.version + 1
-      // each rewritten group yields (new files, inherited stats): stats for
-      // a packed file = union of the replaced files' ranges (no re-scan);
-      // groups with any stat-less member stay stat-less
-      val packed: Seq[(Vector[String], Option[(Long, Long)])] =
-        toRewrite.toSeq.map { case (dir, files) =>
-          val staged = stagingDir("pack", v)
-          // read WITH _seq, write back as-is — one file per former
-          // partition. The group's byte schema excludes ITS OWN layout's
-          // dir column (derived from the path — files from an older
-          // partition-spec epoch carry a different dir key than the
-          // current spec)
-          val (_, dirKey) = layoutOf(files.head)
-          spark.read
-            .schema(StructType(
-              schema.fields.filterNot(f => dirKey.contains(phys(f.name)))
-                .map(f => f.copy(name = phys(f.name))) :+
-                StructField(SEQ, LongType)))
-            .parquet(files.map(f => dataPath(f).toString): _*)
-            .coalesce(1)
-            .write.mode("overwrite").option("compression", "snappy")
-            .parquet(staged.toString)
-          val moved = adoptFiles(staged, dataDir, v)
-          // adoptFiles lands them at the data root; relocate into the
-          // partition dir so directory-partition discovery still works
-          val placed = moved.map { m =>
-            if (dir.isEmpty) m
-            else {
-              val dest = dataDir.resolve(dir).resolve(m)
-              Files.createDirectories(dest.getParent)
-              Files.move(dataDir.resolve(m), dest)
-              s"$dir/$m"
-            }
-          }
-          val oldStats = files.flatMap(prev.fileStats.get)
-          val range =
-            if (oldStats.size == files.size && oldStats.nonEmpty)
-              Some((oldStats.map(_._1).min, oldStats.map(_._2).max))
-            else None
-          (placed, range)
-        }
-      val rewritten = packed.flatMap(_._1).toVector
-      val packedStats = packed.flatMap { case (fs, r) =>
-        r.toSeq.flatMap(range => fs.map(_ -> range))
-      }.toMap
-      val kept = prev.dataFiles.filterNot(f => toRewrite.valuesIterator.exists(_.contains(f)))
-      commit(Snapshot(v, kept ++ rewritten, prev.deleteFiles,
-        prev.appliedBatches, prev.requiresDedup,
-        prev.fileStats.view.filterKeys(kept.contains).toMap ++ packedStats,
-        op = "binpack"))
-      // superseded small files stay on disk: older retained snapshots still
-      // reference them (time travel); expireSnapshots deletes them once no
-      // retained manifest does
-    }
-
-  /** Expire snapshots older than the last `keepLast`, physically deleting
-    * files no retained snapshot references (Iceberg's expire_snapshots).
-    * Time travel to expired versions stops working; the current snapshot
-    * and the newest `keepLast − 1` predecessors remain readable.
-    */
   // ---- branches (write-audit-publish) ----
 
   private def branchesDir: Path = rootPath.resolve("branches")
@@ -2279,10 +2272,7 @@ final class MergeTable(
           if (keep && !Files.exists(manifestDir.resolve(fn)))
             Files.copy(p, manifestDir.resolve(fn))
         })
-        val tmp = rootPath.resolve(s".latest.${UUID.randomUUID()}.tmp")
-        Files.writeString(tmp, head.toString)
-        Files.move(tmp, metaRoot.resolve("_latest"),
-          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+        swingLatest(head)
       }
       // still under the branch lock: no branch commit can slip in between
       // the pointer swing and the directory removal (POSIX allows deleting
@@ -2382,6 +2372,11 @@ final class MergeTable(
     expireSnapshots(keep)
   }
 
+  /** Expire snapshots older than the last `keepLast`, physically deleting
+    * files no retained snapshot references (Iceberg's expire_snapshots).
+    * Time travel to expired versions stops working; the current snapshot
+    * and the newest `keepLast − 1` predecessors remain readable.
+    */
   def expireSnapshots(keepLast: Int = 2): Unit = synchronized {
     require(keepLast >= 1)
     require(!isBranch, "expireSnapshots runs on the main handle only " +
@@ -2427,122 +2422,66 @@ final class MergeTable(
       chunkCache.remove(c)
     }
   }
-
-  /** Scoped (minor) compaction: rewrite ONLY the data files that can hold
-    * a tombstoned key or that share their key range with a file from a
-    * DIFFERENT commit; every other file is carried into the new snapshot
-    * untouched. At 100 TB this bounds maintenance I/O to the slice of the
-    * table the CDC stream actually touched since the last compaction —
-    * the same idea as Iceberg's delete-targeted file rewrite — instead of
-    * `compact()`'s full-table materialization.
-    *
-    * Correctness: files written by one commit are mutually key-unique
-    * (every write path LWW-dedupes or merges before writing), so only
-    * range overlap ACROSS commits can mean a duplicated key, and only a
-    * range overlap with a tombstone can mean a deletable row. "Clean"
-    * files have neither, and so can't be changed by the merge; every
-    * remaining collision and every tombstone resolves inside the
-    * rewritten subset, which is why the commit clears all delete files
-    * and `requiresDedup`. Falls back to the full rewrite when per-file
-    * key stats are unavailable (non-integral merge key).
-    */
-  def compactScoped(spark: SparkSession): Unit = synchronized {
-    val prev = currentSnapshot.getOrElse(return)
-    if (!prev.requiresDedup && prev.deleteFiles.isEmpty) return
-    if (!prev.dataFiles.forall(prev.fileStats.contains)) { compact(spark); return }
-
-    // tombstone key ranges, one per delete file (tombstones are tiny)
-    val tombRanges: Seq[(Long, Long)] =
-      if (prev.deleteFiles.isEmpty) Nil
-      else spark.read
-        .parquet(prev.deleteFiles.map(f => delPath(f).toString): _*)
-        .groupBy(input_file_name())
-        .agg(min(col(phys(keyCol))).as("lo"), max(col(phys(keyCol))).as("hi"))
-        .collect().map(r => (r.getLong(1), r.getLong(2))).toSeq
-
-    val commitOf: String => Long = { f =>
-      val base = f.substring(f.lastIndexOf('/') + 1)
-      "^f(\\d+)-".r.findFirstMatchIn(base).map(_.group(1).toLong).getOrElse(-1L)
-    }
-    final case class F(name: String, lo: Long, hi: Long, commit: Long)
-    val files = prev.dataFiles.map { f =>
-      val (lo, hi) = prev.fileStats(f)
-      F(f, lo, hi, commitOf(f))
-    }
-
-    // sweep files in key order into range-overlap clusters; a cluster is
-    // dirty iff it spans >=2 commits (possible duplicated keys) or
-    // overlaps a tombstone range (possible deleted rows)
-    val sorted = files.sortBy(f => (f.lo, f.hi))
-    val clusters = Vector.newBuilder[Vector[F]]
-    var cur = Vector.empty[F]
-    var curHi = Long.MinValue
-    sorted.foreach { f =>
-      if (cur.nonEmpty && f.lo > curHi) { clusters += cur; cur = Vector.empty }
-      cur = cur :+ f
-      curHi = math.max(curHi, f.hi)
-    }
-    if (cur.nonEmpty) clusters += cur
-    val affected: Set[String] = clusters.result().flatMap { cl =>
-      val lo = cl.map(_.lo).min
-      val hi = cl.map(_.hi).max
-      val dirty = cl.map(_.commit).distinct.size > 1 ||
-        tombRanges.exists(t => t._1 <= hi && t._2 >= lo)
-      if (dirty) cl.map(_.name) else Vector.empty
-    }.toSet
-
-    val clean = prev.dataFiles.filterNot(affected)
-    if (clean.isEmpty) { compact(spark); return }
-    val v = prev.version + 1
-    if (affected.isEmpty) {
-      // metadata-only: nothing can collide or be deleted — flip the flag
-      commit(Snapshot(v, prev.dataFiles, Vector.empty, prev.appliedBatches,
-        requiresDedup = false, prev.fileStats, op = "compact"))
-      return // tombstones stay on disk for older snapshots until expiry
-    }
-
-    val merged = readSnapshot(spark,
-      prev.copy(dataFiles = prev.dataFiles.filter(affected),
-        requiresDedup = true)).cache()
-    try {
-      val range = keyRangeOf(merged)
-      val newFiles = writeUpserts(merged, v)
-      commit(Snapshot(v, clean ++ newFiles, Vector.empty, prev.appliedBatches,
-        requiresDedup = false,
-        (prev.fileStats -- affected) ++
-          range.fold(Map.empty[String, (Long, Long)])(r =>
-            newFiles.map(_ -> r).toMap),
-        op = "compact"))
-      // superseded data files and tombstones stay for retained snapshots;
-      // expireSnapshots reclaims them (Iceberg rewrite/expire split)
-    } finally merged.unpersist()
-  }
-
-  /** Rewrite the merged state as plain insert files and drop tombstones —
-    * the MoR→RoR maintenance the reference configures via
-    * `optimize_rewrite_delete_file_threshold` (README.md:307). After
-    * compaction, reads are shuffle-free scans again.
-    */
-  def compact(spark: SparkSession): Unit = synchronized {
-    val prev = currentSnapshot.getOrElse(return)
-    val v = prev.version + 1
-    val materialized = read(spark).cache()
-    try {
-      val range = keyRangeOf(materialized) // cached — cheap agg, no re-scan
-      val files = writeUpserts(materialized, v)
-      commit(Snapshot(v, files, Vector.empty, prev.appliedBatches,
-        requiresDedup = false,
-        range.fold(Map.empty[String, (Long, Long)])(r => files.map(_ -> r).toMap),
-        op = "compact"))
-      // Superseded files stay on disk: older retained snapshots still
-      // reference them (time travel, rollback, lagging feed consumers);
-      // expireSnapshots physically deletes them once no retained manifest
-      // does — the Iceberg rewrite/expire split.
-    } finally materialized.unpersist()
-  }
 }
 
 object MergeTable {
+  /** A strategy of [[MergeTable.rewrite]], in the shape of Iceberg's
+    * `rewrite_data_files`. All but [[Rewrite.BinPack]] drop superseded
+    * rows and tombstones, so reads are shuffle-free scans again.
+    */
+  sealed trait Rewrite
+
+  object Rewrite {
+    /** The whole merged state as plain insert files. */
+    case object MergeAll extends Rewrite
+
+    /** Only the files a tombstone or a cross-commit duplicate can touch
+      * (Iceberg's delete-targeted rewrite): at 100 TB this bounds
+      * maintenance I/O to the slice the CDC stream touched. [[MergeAll]]
+      * when no file is clean or per-file key stats are missing.
+      */
+    case object Scoped extends Rewrite
+
+    /** Hash-clustered by the merge key into `nBuckets` catalog-registered
+      * bucket files: until the next delta commit, key-equi joins and
+      * aggregations over `read()` plan with ZERO exchanges (the 100 TB
+      * fact-fact join layout; ScalePatterns.writeBucketed is the
+      * catalog-table analog). Main handle only.
+      */
+    final case class Bucketed(nBuckets: Int = 16) extends Rewrite
+
+    /** Range-partitioned and sorted by `column` into about `targetFiles`
+      * files, with per-file ranges of `column` and the key recorded in
+      * the manifest, so `readWhere` prunes files before planning and
+      * `lookup` gets per-file key bounds — the layout for range-predicate
+      * workloads. `column` must be integral or timestamp.
+      */
+    final case class Sorted(column: String, targetFiles: Int = 32) extends Rewrite
+
+    /** [[Sorted]] over 2–3 `columns` at once, clustered by their
+      * bit-interleaved ranks, so `readWhere` on any of them prunes.
+      */
+    final case class ZOrder(columns: Seq[String], targetFiles: Int = 32) extends Rewrite
+
+    /** Small-file maintenance: each directory holding more than
+      * `maxFilesPerPartition` files gets them concatenated into one. No
+      * merge and no shuffle, so it is safe at any time; tombstones and
+      * `requiresDedup` are kept.
+      */
+    final case class BinPack(maxFilesPerPartition: Int = 8) extends Rewrite
+  }
+
+  /** A rewrite layout's new files, their stats, and its bucket count. */
+  private final case class Written(files: Vector[String],
+      keyStats: Map[String, (Long, Long)],
+      colStats: Map[String, Map[String, (Long, Long)]] = Map.empty,
+      buckets: Option[Int] = None)
+
+  /** Column types whose per-file stats fit an order-preserving long. */
+  private val StatTypes: Set[org.apache.spark.sql.types.DataType] = Set(
+    LongType, org.apache.spark.sql.types.IntegerType,
+    org.apache.spark.sql.types.TimestampType)
+
   /** A commit lost the optimistic-concurrency race: the table head moved
     * past the snapshot's base between read and commit. `appendAll` /
     * `applyBatch` catch this internally and rebase (bounded retries);

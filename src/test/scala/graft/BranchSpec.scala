@@ -110,7 +110,7 @@ class BranchSpec extends SparkSpec {
     val b = t.createBranch("x")
     intercept[IllegalArgumentException](b.createBranch("y"))
     intercept[IllegalArgumentException](b.expireSnapshots())
-    intercept[IllegalArgumentException](b.compactBucketed(spark))
+    intercept[IllegalArgumentException](b.rewrite(spark, MergeTable.Rewrite.Bucketed()))
     intercept[IllegalArgumentException](t.branch("nope"))
     t.dropBranch("x")
   }

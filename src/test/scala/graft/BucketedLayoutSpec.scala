@@ -27,7 +27,7 @@ class BucketedLayoutSpec extends SparkSpec {
     val t = freshTable(partitioned = false)
     t.applyBatch(batch(0 until 500, "insert"))
     t.applyBatch(batch(100 until 200, "update"))
-    t.compactBucketed(spark, nBuckets = 4)
+    t.rewrite(spark, MergeTable.Rewrite.Bucketed(nBuckets = 4))
 
     val r = t.read(spark)
     assert(r.count() == 500)
@@ -54,7 +54,7 @@ class BucketedLayoutSpec extends SparkSpec {
     t.applyBatch(batch(0 until 300, "insert", "visit")
       .unionByName(batch(300 until 400, "insert", "cart")))
     t.applyBatch(batch(0 until 50, "delete"))
-    t.compactBucketed(spark, nBuckets = 4)
+    t.rewrite(spark, MergeTable.Rewrite.Bucketed(nBuckets = 4))
     assert(t.read(spark).count() == 350)
     val plan = t.read(spark).groupBy("trans_id").count()
       .queryExecution.executedPlan.toString
@@ -70,7 +70,7 @@ class BucketedLayoutSpec extends SparkSpec {
   test("deltas after bucketed compaction fall back to the merge view; re-bucketing restores zero-exchange") {
     val t = freshTable(partitioned = true)
     t.applyBatch(batch(0 until 200, "insert"))
-    t.compactBucketed(spark, nBuckets = 4)
+    t.rewrite(spark, MergeTable.Rewrite.Bucketed(nBuckets = 4))
     // delta lands AFTER bucketing: snapshot loses the bucket flag
     t.applyBatch(batch(150 until 250, "update", "cart"))
     val merged = t.read(spark)
@@ -78,9 +78,9 @@ class BucketedLayoutSpec extends SparkSpec {
     assert(merged.filter(col("trans_id") === 160).select("event")
       .collect().head.getString(0) == "cart")
     // binPack must refuse to touch a bucketed snapshot's files
-    t.compactBucketed(spark, nBuckets = 4)
+    t.rewrite(spark, MergeTable.Rewrite.Bucketed(nBuckets = 4))
     val before = t.currentSnapshot.get.dataFiles
-    t.binPack(spark)
+    t.rewrite(spark, MergeTable.Rewrite.BinPack())
     assert(t.currentSnapshot.get.dataFiles == before)
     val plan = t.read(spark).groupBy("trans_id").count()
       .queryExecution.executedPlan.toString
@@ -93,7 +93,7 @@ class BucketedLayoutSpec extends SparkSpec {
     t.applyBatch(batch(0 until 100, "insert"))          // v1
     val v1 = t.latestVersion
     t.applyBatch(batch(0 until 30, "delete"))           // v2
-    t.compactBucketed(spark, nBuckets = 4)              // v3, layout-only
+    t.rewrite(spark, MergeTable.Rewrite.Bucketed(nBuckets = 4))              // v3, layout-only
 
     // time travel to pre-compaction versions must still read deleted files
     assert(t.read(spark, Some(v1)).count() == 100)
@@ -106,7 +106,7 @@ class BucketedLayoutSpec extends SparkSpec {
     t.rollbackTo(v1)
     assert(t.read(spark).count() == 100)
     // expireSnapshots is the only reclaimer of the superseded files
-    t.compactBucketed(spark, nBuckets = 4)
+    t.rewrite(spark, MergeTable.Rewrite.Bucketed(nBuckets = 4))
     t.expireSnapshots(keepLast = 1)
     assert(t.read(spark).count() == 100)
   }

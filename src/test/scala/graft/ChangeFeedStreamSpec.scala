@@ -120,7 +120,7 @@ class ChangeFeedStreamSpec extends SparkSpec {
     try {
       q.processAllAvailable() // nothing past v0 yet
       assert(spark.table("feed_tail").count() === 0)
-      t.binPack(spark) // maintenance commit only
+      t.rewrite(spark, MergeTable.Rewrite.BinPack()) // maintenance commit only
       q.processAllAvailable()
       assert(spark.table("feed_tail").count() === 0)
       CdcPipeline.replayBatch(spark,

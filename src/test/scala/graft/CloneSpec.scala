@@ -123,6 +123,17 @@ class CloneSpec extends SparkSpec {
     assert(state(c)(19L) === 555)
   }
 
+  test("a clone of a renamed table reopens under the renamed schema") {
+    val src = build(tmpDir("clone-ren") + "/src").renameColumn("amount", "amt")
+    val c = src.shallowClone(tmpDir("clone-ren-dst") + "/c")
+    def byKey(t: MergeTable): Map[Long, Int] =
+      t.read(spark).select(col("trans_id"), col("amt"))
+        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val reopened = MergeTable.open(c.root)
+    assert(reopened.physicalNames === Map("amt" -> "amount"))
+    assert(byKey(reopened) === byKey(src))
+  }
+
   test("clone of a clone chains fallbacks across all three roots") {
     val src = build(tmpDir("clcsrc"))
     val c1 = src.shallowClone(tmpDir("clc1") + "/t")

@@ -199,6 +199,43 @@ class ConcurrentCommitSpec extends SparkSpec {
     assert(t2.read(spark).count() === 2)
   }
 
+  test("a rewrite losing the race to a commit landed after its head read throws and leaves no unreferenced file") {
+    import MergeTable.Rewrite._
+    val strategies = Seq(MergeAll, Scoped, Bucketed(4), Sorted("amount", 4),
+      ZOrder(Seq("amount", "trans_datetime"), 4), BinPack(1))
+    strategies.zipWithIndex.foreach { case (how, i) =>
+      val root = tmpDir(s"ccr$i") + "/t"
+      val t = MergeTable.retailTrans(root, threshold = 100)
+      t.applyBatch(batch((1L, "cart", 10, "insert", "2023-01-01 00:00:01", 1L),
+        (2L, "cart", 20, "insert", "2023-01-01 00:00:02", 2L),
+        (3L, "list", 30, "insert", "2023-01-01 00:00:03", 3L)), Some("b0"))
+      t.applyBatch(batch((1L, "cart", 11, "update", "2023-01-01 00:00:04", 4L),
+        (2L, "cart", 20, "delete", "2023-01-01 00:00:05", 5L),
+        (4L, "cart", 40, "insert", "2023-01-01 00:00:06", 6L)), Some("b1"))
+
+      val a = MergeTable.open(root)
+      val b = MergeTable.open(root)
+      var landed = false
+      a.onBaseSnapshotRead = () => if (!landed) {
+        landed = true
+        b.applyBatch(batch((9L, "visit", 90, "insert", "2023-01-01 00:00:09", 9L)),
+          Some("foreign"))
+      }
+      intercept[MergeTable.CommitConflictException](a.rewrite(spark, how))
+      assert(landed, s"$how: seam never fired")
+
+      val fresh = MergeTable.open(root)
+      val referenced = fresh.history.flatMap(_.dataFiles).toSet
+      val dataDir = Paths.get(root, "data")
+      val onDisk = Files.walk(dataDir).iterator().asScala
+        .filter(Files.isRegularFile(_)).map(dataDir.relativize(_).toString).toSet
+      assert(onDisk -- referenced === Set.empty, s"$how left unreferenced files")
+      assert(fresh.latestVersion === 2, s"$how: only the foreign commit lands")
+      assert(state(fresh) === Map(1L -> ("cart", 11), 3L -> ("list", 30),
+        4L -> ("cart", 40), 9L -> ("visit", 90)), s"$how")
+    }
+  }
+
   test("branch commit racing publishBranch is published or fails loudly, never silently lost") {
     // Window: publishBranch once read the branch head BEFORE taking any
     // lock that excludes branch committers, so a commit landing during

@@ -23,7 +23,7 @@ class MaintenanceSpec extends SparkSpec {
     val filesBefore = t.currentSnapshot.get.dataFiles.size
     assert(filesBefore >= 10)
 
-    t.binPack(spark, maxFilesPerPartition = 1)
+    t.rewrite(spark, MergeTable.Rewrite.BinPack(maxFilesPerPartition = 1))
     val after = state(t)
     val filesAfter = t.currentSnapshot.get.dataFiles.size
     assert(after === before)
@@ -37,7 +37,7 @@ class MaintenanceSpec extends SparkSpec {
     CdcPipeline.replayBatch(spark, GoldenCorpus.df(spark, GoldenCorpus.insertOnlyLines), t, None, Some("p1"))
     CdcPipeline.replayBatch(spark, GoldenCorpus.df(spark, GoldenCorpus.dmlLines), t, None, Some("p2"))
     val before = state(t)
-    t.binPack(spark, maxFilesPerPartition = 1)
+    t.rewrite(spark, MergeTable.Rewrite.BinPack(maxFilesPerPartition = 1))
     assert(state(t) === before)
     assert(state(t)(19L) === 39) // updated amount still wins over the insert
     assert(t.read(spark).count() === 12)
@@ -48,7 +48,7 @@ class MaintenanceSpec extends SparkSpec {
     CdcPipeline.replayBatch(spark, GoldenCorpus.df(spark, GoldenCorpus.insertOnlyLines), t, None, Some("p1"))
     val v0 = t.latestVersion
     CdcPipeline.replayBatch(spark, GoldenCorpus.df(spark, GoldenCorpus.dmlLines), t, None, Some("p2"))
-    t.binPack(spark, maxFilesPerPartition = 1)
+    t.rewrite(spark, MergeTable.Rewrite.BinPack(maxFilesPerPartition = 1))
     // pre-pack snapshots still fully readable (files not deleted yet)
     assert(t.read(spark, Some(v0)).count() === 10)
     // expiry is what reclaims the superseded small files

@@ -114,7 +114,7 @@ class PartitionEvolutionSpec extends SparkSpec {
       t1.updateWhere(spark, $"trans_id" === 19, Map("amount" -> lit(100 + i)))
     t1.compactScoped(spark) // clear merge debt so binPack sees a scan state
     val before = t1.read(spark).orderBy($"trans_id").collect().map(_.toSeq)
-    t1.binPack(spark, maxFilesPerPartition = 1)
+    t1.rewrite(spark, MergeTable.Rewrite.BinPack(maxFilesPerPartition = 1))
     val after = MergeTable.open(root).read(spark)
       .orderBy($"trans_id").collect().map(_.toSeq)
     assert(after.toSeq === before.toSeq, "binPack must be layout-only")

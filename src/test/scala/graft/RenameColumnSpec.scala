@@ -87,7 +87,7 @@ class RenameColumnSpec extends SparkSpec {
   test("compactSorted stats survive a LATER rename: readWhere prunes by the new name") {
     val root = tmpDir("ren4")
     val t0 = golden(root)
-    t0.compactSorted(spark, "amount", targetFiles = 4)
+    t0.rewrite(spark, MergeTable.Rewrite.Sorted("amount", targetFiles = 4))
     // rename AFTER stats were recorded — stats are keyed physically,
     // so pruning through the new logical name must still hit them
     val t1 = MergeTable.open(root).renameColumn("amount", "amt")
@@ -139,7 +139,7 @@ class RenameColumnSpec extends SparkSpec {
     val root = tmpDir("ren7")
     val t0 = golden(root)
     val t1 = t0.renameColumn("trans_id", "id")
-    t1.compactBucketed(spark, nBuckets = 4)
+    t1.rewrite(spark, MergeTable.Rewrite.Bucketed(nBuckets = 4))
     val r = t1.read(spark)
     assert(r.count() === 12)
     // key-equi aggregation over the bucketed read plans without a shuffle

@@ -28,7 +28,7 @@ class SortedLayoutSpec extends SparkSpec {
     val t = freshTable()
     t.applyBatch(batch(0 until 2000, "insert"))
     t.applyBatch(batch(500 until 600, "update"))
-    t.compactSorted(spark, "amount", targetFiles = 8)
+    t.rewrite(spark, MergeTable.Rewrite.Sorted("amount", targetFiles = 8))
 
     val snap = t.currentSnapshot.get
     val stats = snap.colStats("amount")
@@ -51,7 +51,7 @@ class SortedLayoutSpec extends SparkSpec {
   test("readWhere falls back to the merged view after a delta; re-sorting restores pruning") {
     val t = freshTable()
     t.applyBatch(batch(0 until 1000, "insert"))
-    t.compactSorted(spark, "amount", targetFiles = 8)
+    t.rewrite(spark, MergeTable.Rewrite.Sorted("amount", targetFiles = 8))
     // update MOVES sort values (amount = id*7%1000 -> all 999): pruning on
     // the old ranges would resurrect stale copies — must fall back
     import spark.implicits._
@@ -66,7 +66,7 @@ class SortedLayoutSpec extends SparkSpec {
     // keys 0..100 moved to 999: none of them may appear in [0,10]
     assert(got.filter(col("trans_id") < 100).count() == 0)
 
-    t.compactSorted(spark, "amount", targetFiles = 8)
+    t.rewrite(spark, MergeTable.Rewrite.Sorted("amount", targetFiles = 8))
     assert(t.prunedFilesFor("amount", 0, 10).size
       < t.currentSnapshot.get.dataFiles.size)
     val again = t.readWhere(spark, "amount", 0, 10)
@@ -78,7 +78,7 @@ class SortedLayoutSpec extends SparkSpec {
     t.applyBatch(batch(0 until 500, "insert", "visit")
       .unionByName(batch(500 until 700, "insert", "cart")))
     val vPre = t.latestVersion
-    t.compactSorted(spark, "amount", targetFiles = 4)
+    t.rewrite(spark, MergeTable.Rewrite.Sorted("amount", targetFiles = 4))
     val statsAfterSort = t.currentSnapshot.get.colStats("amount")
     // append-only delta: old files keep their stats, new file has none
     t.appendAll(batch(700 until 720, "insert", "visit"))
@@ -108,7 +108,7 @@ class SortedLayoutSpec extends SparkSpec {
       .toDF("trans_id", "customer_id", "event", "sku", "amount", "device",
         "trans_datetime", "operation")
     t.applyBatch(rows)
-    t.compactZOrder(spark, Seq("amount", "trans_datetime"), targetFiles = 16)
+    t.rewrite(spark, MergeTable.Rewrite.ZOrder(Seq("amount", "trans_datetime"), targetFiles = 16))
 
     val snap = t.currentSnapshot.get
     assert(snap.colStats.contains("amount") && snap.colStats.contains("trans_datetime"))
