@@ -2,6 +2,7 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructField
 
 import graft.table.MergeTable
 import graft.transform.{CdcRoute, CdcTransformer}
@@ -128,18 +129,8 @@ object CdcPipeline {
         val classified = CdcTransformer
           .classify(batch, cfg.srcDatabase, cfg.srcTable).cache()
         try {
-          // extras derive from the OPENED table's schema unconditionally —
-          // only drift DETECTION is gated on the flag. A restart with
-          // evolveSchema=false on a previously evolved table must still
-          // project the evolved columns, or applyBatch's payload select
-          // fails analysis on every micro-batch.
-          val extras = {
-            if (cfg.evolveSchema)
-              CdcTransformer.driftColumns(classified, table.schema.fieldNames.toSet)
-                .foreach(f => table = table.addColumn(f))
-            table.schema.fields.toSeq
-              .filterNot(f => CdcTransformer.BasePayloadCols(f.name))
-          }
+          val (evolved, extras) = withDrift(classified, table, cfg.evolveSchema)
+          table = evolved
           val res = CdcTransformer.fromClassified(classified, extraCols = extras)
           CdcTransformer.writeErrors(res.errors, cfg.errorRoot)
           table.applyBatch(res.good, Some(batchId.toString))
@@ -201,19 +192,28 @@ object CdcPipeline {
       batchId: Option[String] = None,
       evolve: Boolean = false): MergeTable = {
     val classified = CdcTransformer.classify(lines)
-    var tbl = table
-    // as in start(): extras always reflect the table's current schema so a
-    // non-evolving replay into an evolved table still projects its columns
-    val extras = {
-      if (evolve)
-        CdcTransformer.driftColumns(classified, tbl.schema.fieldNames.toSet)
-          .foreach(f => tbl = tbl.addColumn(f))
-      tbl.schema.fields.toSeq
-        .filterNot(f => CdcTransformer.BasePayloadCols(f.name))
-    }
+    val (tbl, extras) = withDrift(classified, table, evolve)
     val res = CdcTransformer.fromClassified(classified, extraCols = extras)
     errorRoot.foreach(CdcTransformer.writeErrors(res.errors, _))
     tbl.applyBatch(res.good, batchId)
     tbl
+  }
+
+  /** The table handle a batch applies to, and the payload columns it
+    * carries beyond the base ones. With `evolve`, payload fields beyond
+    * the table schema (drift) are first added as columns, metadata-only;
+    * the returned handle is the evolved one. The extras derive from the
+    * table's schema unconditionally — only drift DETECTION is gated on the
+    * flag: a restart or replay without evolution onto a previously evolved
+    * table must still project the evolved columns, or applyBatch's payload
+    * select fails analysis on every batch.
+    */
+  private def withDrift(classified: DataFrame, table: MergeTable,
+      evolve: Boolean): (MergeTable, Seq[StructField]) = {
+    val tbl =
+      if (!evolve) table
+      else CdcTransformer.driftColumns(classified, table.schema.fieldNames.toSet)
+        .foldLeft(table)(_.addColumn(_))
+    (tbl, tbl.schema.fields.toSeq.filterNot(f => CdcTransformer.BasePayloadCols(f.name)))
   }
 }

@@ -165,12 +165,12 @@ final class MergeTable(
     branchName.fold(rootPath)(n => rootPath.resolve("branches").resolve(n))
   private val manifestDir: Path = metaRoot.resolve("manifest")
 
-  /** Test seam: invoked after each commit attempt's base-snapshot read,
-    * before anything derived from it. Lets ConcurrentCommitSpec land a
-    * foreign commit deterministically inside the window where a separate
-    * `latestVersion` re-read once let that commit be silently dropped
-    * (the proposed version now derives from the SAME read, so the stale
-    * attempt must conflict and rebase instead).
+  /** Test seam: invoked by [[commitWrite]] after each commit attempt's
+    * base-snapshot read, before anything derived from it. Lets
+    * ConcurrentCommitSpec land a foreign commit deterministically inside
+    * the window where a separate `latestVersion` re-read once let that
+    * commit be silently dropped (the proposed version now derives from
+    * the SAME read, so the stale attempt must conflict instead).
     */
   private[graft] var onBaseSnapshotRead: () => Unit = () => ()
 
@@ -391,6 +391,11 @@ final class MergeTable(
     if (v < 0) None else Some(readManifest(v))
   }
 
+  /** The base of an uncreated table: version -1, nothing in it. */
+  private val noSnapshot = Snapshot(-1, Vector.empty, Vector.empty, Set.empty, false)
+
+  private def headOrEmpty: Snapshot = currentSnapshot.getOrElse(noSnapshot)
+
   /** All retained versions, oldest first (snapshot history / time travel).
     * Versions removed by `expireSnapshots` no longer appear.
     */
@@ -434,14 +439,18 @@ final class MergeTable(
 
   /** Two-writer commit contract: the whole critical section runs under
     * [[withCommitLock]], so exactly one committer wins each version slot.
+    * Its one caller is [[commitWrite]], the commit protocol every writer
+    * goes through.
     *
     *   - A committer whose snapshot was built against a head the table
     *     has since moved past gets a [[MergeTable.CommitConflictException]]
     *     BEFORE anything is written — never a silent overwrite, never a
-    *     backwards `_latest` swing. `appendAll`/`applyBatch` catch it and
-    *     rebase (re-run the merge against the fresh snapshot, bounded
-    *     retries); maintenance/overwrite committers surface it to the
-    *     caller, whose intent against a moved head is genuinely ambiguous.
+    *     backwards `_latest` swing. `commitWrite` then deletes what the
+    *     attempt staged. `appendAll`, `applyBatch` and
+    *     `inheritAppliedBatches` rebase (re-run the attempt against the
+    *     fresh snapshot, bounded retries); `rewrite`, `overwrite`,
+    *     `truncate` and `rollbackTo` surface it to the caller, whose
+    *     intent against a moved head is genuinely ambiguous.
     *   - A manifest file sitting ABOVE `_latest` while we hold the lock
     *     can only be debris from a writer that died between its manifest
     *     move and pointer swing (no live committer can be mid-commit —
@@ -487,17 +496,19 @@ final class MergeTable(
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Run `attempt` until it commits or `maxAttempts` conflicts: the
-    * detect-and-rebase loop for the batch writers. Each retry re-reads
+  /** Conflicted attempts after which a rebasing writer gives up. */
+  private val MaxCommitAttempts = 10
+
+  /** Run `attempt` until it commits or [[MaxCommitAttempts]] conflicts:
+    * the detect-and-rebase loop for the batch writers. Each retry re-reads
     * the head inside `attempt`, so the merge is re-run against the fresh
     * snapshot (new `_seq` stamp, fresh idempotence/requiresDedup state)
     * rather than replayed blind.
     */
-  private def withCommitRetries(what: String, maxAttempts: Int = 10)(
-      attempt: () => Unit): Unit = {
+  private def withCommitRetries[T](what: String)(attempt: => T): T = {
     var n = 0
-    var committed = false
-    while (!committed) {
+    var result = Option.empty[T]
+    while (result.isEmpty) {
       n += 1
       try {
         // Optimistic attempts write their data files OUTSIDE the commit
@@ -510,14 +521,54 @@ final class MergeTable(
         // ENTIRE attempt under the (reentrant) commit lock, where the
         // head provably cannot move — guaranteed progress, paid only on
         // the contended tail.
-        if (n > 3) withCommitLock(attempt()) else attempt()
-        committed = true
+        result = Some(if (n > 3) withCommitLock(attempt) else attempt)
       } catch {
         case e: MergeTable.CommitConflictException =>
-          if (n >= maxAttempts) throw new MergeTable.CommitConflictException(
-            s"$what gave up after $maxAttempts conflicted attempts: ${e.getMessage}")
+          if (n >= MaxCommitAttempts) throw new MergeTable.CommitConflictException(
+            s"$what gave up after $MaxCommitAttempts conflicted attempts: ${e.getMessage}")
       }
     }
+    result.get
+  }
+
+  /** The one commit protocol: every writer that produces a snapshot runs
+    * through it. It checks `batchId`, and an already-applied one
+    * (checkpoint recovery) returns at once, at zero Spark jobs. Each
+    * attempt then reads the head, fires the [[onBaseSnapshotRead]] seam,
+    * re-checks for a replay (the conflicting writer may have been a
+    * replay of this very batch id), and proposes the next version FROM
+    * THAT SAME READ: a second `latestVersion` read would let a commit
+    * landing in between slip past commit()'s conflict check and vanish.
+    * `stage` writes the attempt's files and returns the snapshot to
+    * commit with what it staged, or None to commit nothing; `batchId`
+    * joins the snapshot's applied batches. An attempt that loses the
+    * race deletes what it staged before the conflict propagates: to the
+    * retry loop when `rebase`, else to the caller. Returns whether a
+    * snapshot was committed.
+    */
+  private def commitWrite(what: String, batchId: Option[String] = None,
+      rebase: Boolean = false)(
+      stage: (Snapshot, Long) => Option[(Snapshot, MergeTable.Written)]): Boolean = {
+    batchId.foreach(id => require(!id.exists(c => c == '\t' || c == '\n'),
+      "batchId must not contain tab/newline (manifest is TSV)"))
+    def replayed(s: Snapshot) = batchId.exists(s.appliedBatches)
+    if (replayed(headOrEmpty)) return false
+    def attempt(): Boolean = {
+      val prev = headOrEmpty
+      onBaseSnapshotRead()
+      !replayed(prev) && stage(prev, prev.version + 1).exists { case (s, out) =>
+        try commit(s.copy(appliedBatches = s.appliedBatches ++ batchId))
+        catch {
+          case e: MergeTable.CommitConflictException =>
+            // the losing attempt's files are unreferenced (its `_seq`
+            // stamp belongs to the slot the winner took) — reclaim eagerly
+            discard(out, s.version)
+            throw e
+        }
+        true
+      }
+    }
+    if (rebase) withCommitRetries(what)(attempt()) else attempt()
   }
 
   def create(): this.type = {
@@ -643,11 +694,18 @@ final class MergeTable(
     }
   }
 
-  /** Delete files a commit never published (a losing or rejected attempt). */
-  private def discard(data: Seq[String], dels: Seq[String] = Nil): Unit = {
-    data.foreach(f => Files.deleteIfExists(dataDir.resolve(f)))
-    dels.foreach(f => Files.deleteIfExists(deleteDir.resolve(f)))
-  }
+  /** Delete what commit `v` staged but never published (a losing or
+    * rejected attempt): its data and delete files, or its bucketed layout
+    * with the layout's catalog entry.
+    */
+  private def discard(out: MergeTable.Written, v: Long): Unit =
+    if (out.buckets.isDefined) {
+      SparkSession.active.sql(s"DROP TABLE IF EXISTS ${bucketTableName(v)}")
+      deleteRecursively(bucketDir(v))
+    } else {
+      out.files.foreach(f => Files.deleteIfExists(dataDir.resolve(f)))
+      out.dels.foreach(f => Files.deleteIfExists(deleteDir.resolve(f)))
+    }
 
   private def stagingDir(tag: String, v: Long): Path =
     rootPath.resolve(s".staging-$tag-v$v-${UUID.randomUUID().toString.take(8)}")
@@ -689,10 +747,47 @@ final class MergeTable(
     adoptFiles(staged, deleteDir, v)
   }
 
-  /** (min, max) of an integral merge key over a frame — one cheap agg on
-    * the (usually cached) input, never a re-read of written files. Powers
-    * `lookup` data skipping; None for non-integral keys or empty input.
+  /** Stage `rows` through `write` as the data files of commit `v`,
+    * observing on the write job itself — zero extra jobs — the row count,
+    * the merge-key range (integral keys; per-commit data-skipping bounds
+    * for `lookup`, where per-file footer stats would re-read every new
+    * file) and the violation count of each of `cks`, plus `extra`
+    * metrics, whose raw values are returned. A write of no rows keeps no
+    * file (unpartitioned writes emit 0-row part files from idle tasks); a
+    * violation deletes what was staged and throws before anything
+    * commits.
     */
+  private def writeObserved(rows: DataFrame, v: Long, cks: Seq[(String, String)],
+      extra: Column*)(write: (DataFrame, Long) => Vector[String])
+      : (MergeTable.Written, Map[String, Any]) = {
+    val keyIsLong = schema(keyCol).dataType == LongType
+    val obs = org.apache.spark.sql.Observation()
+    val metrics = Seq(count(lit(1)).as("_n")) ++
+      (if (keyIsLong) Seq(min(col(keyCol)).as("_lo"), max(col(keyCol)).as("_hi"))
+       else Nil) ++ constraintMetrics(cks) ++ extra
+    val raw = write(rows.observe(obs, metrics.head, metrics.tail: _*), v)
+    val m = obs.get
+    val n = observed(m, "_n")
+    val files = if (n > 0) raw else { discard(MergeTable.Written(raw), v); Vector.empty }
+    val ckCounts = cks.indices.map(i => observed(m, s"_ck$i"))
+    if (ckCounts.exists(_ > 0)) {
+      discard(MergeTable.Written(files), v)
+      failOnViolations(cks, ckCounts)
+    }
+    val range =
+      if (m.get("_lo").exists(_ != null)) Some((observed(m, "_lo"), observed(m, "_hi")))
+      else None
+    (MergeTable.Written(files, rangeStats(files, range)), m)
+  }
+
+  /** An observed count; absent (a no-task plan never emits its metrics
+    * row) reads as zero.
+    */
+  private def observed(m: Map[String, Any], name: String): Long = m.get(name) match {
+    case Some(x: Number) => x.longValue()
+    case _               => 0L
+  }
+
   // ---- CHECK constraints (Delta-style, reject-whole-batch) ----
 
   private val constraintsFile: Path = rootPath.resolve("_constraints")
@@ -710,6 +805,9 @@ final class MergeTable(
       .filter(_.nonEmpty).map { l =>
         val Array(n, e) = l.split("\t", 2); n -> e
       }.toMap
+
+  /** [[checkConstraints]] in name order: the order violations report in. */
+  private def constraints: Seq[(String, String)] = checkConstraints.toSeq.sortBy(_._1)
 
   /** Add a CHECK constraint after validating EXISTING rows satisfy it
     * (the Delta contract — a constraint that is already false would make
@@ -767,7 +865,7 @@ final class MergeTable(
     * land each slice exactly-once even when the crash fell between the
     * two commits. Returns (clean, dead) row counts, read from the split
     * aggregation (the persisted split costs one pass; the clean append's
-    * fused re-check then passes by construction).
+    * observed re-check then passes by construction).
     */
   def appendWithDeadLetter(rows: DataFrame, deadLetter: MergeTable,
       batchId: Option[String] = None): (Long, Long) = {
@@ -795,7 +893,7 @@ final class MergeTable(
   private def splitAppend(rows: DataFrame, deadLetter: MergeTable,
       batchId: Option[String], keep: Boolean): (DataFrame, Long, Long) = {
     def kept(df: DataFrame) = if (keep) df.localCheckpoint(eager = true) else df
-    val cks = checkConstraints.toSeq.sortBy(_._1)
+    val cks = constraints
     if (cks.isEmpty) {
       val all = kept(rows)
       val n = all.count()
@@ -819,21 +917,10 @@ final class MergeTable(
     } finally { flagged.unpersist(blocking = false); () }
   }
 
-  private def keyRangeOf(rows: DataFrame): Option[(Long, Long)] = {
-    if (schema(keyCol).dataType != LongType) return None
-    val r = rows.agg(min(col(keyCol)).as("lo"), max(col(keyCol)).as("hi"))
-      .collect().head
-    if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
-  }
-
   /** Per-file key stats when every file carries the same `range`. */
   private def rangeStats(files: Vector[String],
       range: Option[(Long, Long)]): Map[String, (Long, Long)] =
     range.fold(Map.empty[String, (Long, Long)])(r => files.map(_ -> r).toMap)
-
-  private def requireBatchId(batchId: Option[String]): Unit =
-    batchId.foreach(id => require(!id.exists(c => c == '\t' || c == '\n'),
-      "batchId must not contain tab/newline (manifest is TSV)"))
 
   /** The replay-dedup ledger: batch ids whose commits have landed on
     * this table. Exposed so a DERIVED table can [[inheritAppliedBatches]].
@@ -850,20 +937,10 @@ final class MergeTable(
     * batch whose rows the derivation already carried over.
     */
   def inheritAppliedBatches(ids: Set[String]): Unit = synchronized {
-    if (ids.nonEmpty) withCommitRetries("inheritAppliedBatches") { () =>
-      val prev = currentSnapshot
-      onBaseSnapshotRead()
-      val have = prev.map(_.appliedBatches).getOrElse(Set.empty)
-      if ((ids -- have).nonEmpty) {
-        val v = prev.map(_.version).getOrElse(-1L) + 1
-        commit(Snapshot(v,
-          prev.map(_.dataFiles).getOrElse(Vector.empty),
-          prev.map(_.deleteFiles).getOrElse(Vector.empty),
-          have ++ ids,
-          prev.exists(_.requiresDedup),
-          prev.map(_.fileStats).getOrElse(Map.empty),
-          op = "append"))
-      }
+    if (ids.nonEmpty) commitWrite("inheritAppliedBatches", rebase = true) { (prev, v) =>
+      Option.when((ids -- prev.appliedBatches).nonEmpty)(Snapshot(v, prev.dataFiles,
+        prev.deleteFiles, prev.appliedBatches ++ ids, prev.requiresDedup,
+        prev.fileStats, op = "append") -> MergeTable.Written())
     }
   }
 
@@ -872,60 +949,13 @@ final class MergeTable(
     */
   def appendAll(rows: DataFrame, batchId: Option[String] = None): Unit =
     synchronized {
-      requireBatchId(batchId)
-      // replay short-circuit BEFORE the keyRangeOf aggregation: an
-      // already-applied batch (checkpoint recovery) must cost zero Spark jobs
-      if (batchId.exists(id =>
-          currentSnapshot.exists(_.appliedBatches.contains(id)))) return
-      val cks = checkConstraints.toSeq.sortBy(_._1)
-      val range = if (cks.isEmpty) keyRangeOf(rows) else {
-        // constraint counts FUSED into the existing key-range agg — no
-        // extra job per batch; violations throw before any file is staged
-        val keyIsLong = schema(keyCol).dataType == LongType
-        val aggs = (if (keyIsLong)
-            Seq(min(col(keyCol)).as("lo"), max(col(keyCol)).as("hi"))
-          else Seq(count(lit(1)).as("lo"))) ++ constraintMetrics(cks)
-        val r = rows.agg(aggs.head, aggs.tail: _*).collect().head
-        failOnViolations(cks,
-          cks.indices.map(i => r.getLong(r.fieldIndex(s"_ck$i"))))
-        if (keyIsLong && !r.isNullAt(0)) Some((r.getLong(0), r.getLong(1)))
-        else None
-      }
-      withCommitRetries("appendAll") { () =>
-        val prev = currentSnapshot
-        onBaseSnapshotRead()
-        // re-checked every attempt: the conflicting writer may have been a
-        // replay of this very batch id
-        if (!batchId.exists(id => prev.exists(_.appliedBatches.contains(id)))) {
-          // the proposed version MUST derive from the same snapshot read as
-          // the file lists: a second `latestVersion` read here would let a
-          // commit that landed in between slip past commit()'s conflict
-          // check and vanish from the table
-          val v = prev.map(_.version).getOrElse(-1L) + 1
-          val files = writeUpserts(rows, v)
-          try commit(Snapshot(
-            v,
-            prev.map(_.dataFiles).getOrElse(Vector.empty) ++ files,
-            prev.map(_.deleteFiles).getOrElse(Vector.empty),
-            prev.map(_.appliedBatches).getOrElse(Set.empty) ++ batchId,
-            prev.exists(_.requiresDedup),
-            prev.map(_.fileStats).getOrElse(Map.empty) ++ rangeStats(files, range),
-            op = "append"))
-          catch {
-            case e: MergeTable.CommitConflictException =>
-              // losing attempt's files are unreferenced — reclaim eagerly
-              discard(files)
-              throw e
-          }
-        }
+      commitWrite("appendAll", batchId, rebase = true) { (prev, v) =>
+        val (out, _) = writeObserved(rows, v, constraints)(writeUpserts)
+        Some(Snapshot(v, prev.dataFiles ++ out.files, prev.deleteFiles,
+          prev.appliedBatches, prev.requiresDedup, prev.fileStats ++ out.keyStats,
+          op = "append") -> out)
       }
     }
-
-  /** An observed count; absent (a no-task plan) reads as zero. */
-  private def observed(m: Map[String, Any], name: String): Long = m.get(name) match {
-    case Some(x: Number) => x.longValue()
-    case _               => 0L
-  }
 
   /** Keyed transactional apply — the reference's J1 merge
     * (firehose_to_iceberg.py:109–116): `insert|update` upsert by `keyCol`,
@@ -938,10 +968,6 @@ final class MergeTable(
     */
   def applyBatch(batch: DataFrame, batchId: Option[String] = None): Unit =
     synchronized {
-      requireBatchId(batchId)
-      if (batchId.exists(id =>
-          currentSnapshot.exists(_.appliedBatches.contains(id)))) return
-
       val hasTs = batch.columns.contains("src_timestamp")
       val hasTx = batch.columns.contains("transaction_id")
       val ordering =
@@ -958,93 +984,34 @@ final class MergeTable(
             .filter(col("_rn") === 1).drop("_rn")
         } else batch.dropDuplicates(keyCol)
 
-      val cks = checkConstraints.toSeq.sortBy(_._1)
-      val cached = lww.cache()
-      try {
-        withCommitRetries("applyBatch") { () =>
-          val prev = currentSnapshot
-          onBaseSnapshotRead()
-          // re-checked every attempt: the conflicting writer may have been
-          // a replay of this very batch id
-          if (!batchId.exists(id => prev.exists(_.appliedBatches.contains(id)))) {
-            // version derived from the SAME read as the file lists (see
-            // appendAll): a separate `latestVersion` read would let a commit
-            // landing between the two reads be silently dropped
-            val v = prev.map(_.version).getOrElse(-1L) + 1
-            // Zero dedicated metadata jobs per micro-batch: op counts and the
-            // batch key range ride the WRITE jobs as Observation metrics (the
-            // earlier standalone groupBy-collect was a full extra job per
-            // batch; before that, per-question isEmpty() probes were three).
-            // The key range gives per-BATCH data-skipping bounds for free —
-            // per-file footer stats would re-read every new file.
-            val keyIsLong = schema(keyCol).dataType == LongType
-            val upObs = org.apache.spark.sql.Observation()
-            val upMetrics = Seq(
-              count(lit(1)).as("nup"),
-              count(when(col("operation") === "update", 1)).as("nupd")) ++
-              (if (keyIsLong) Seq(min(col(keyCol)).as("lo"), max(col(keyCol)).as("hi"))
-               else Nil) ++
-              // CHECK violation counts ride the same write-job observation
-              // (zero extra jobs); upserts only — tombstones carry no payload
-              constraintMetrics(cks)
-            val upserts = cached.filter(col("operation").isin("insert", "update"))
-              .observe(upObs, upMetrics.head, upMetrics.tail: _*)
-            val rawData = writeUpserts(upserts, v)
-            // an empty slice can collapse to a no-task plan that never emits
-            // its metrics row — absent metrics mean zero rows
-            val um = upObs.get
-            def metric(name: String): Long = observed(um, name)
-            val nUpserts = metric("nup")
-            val anyUpdates = metric("nupd") > 0
-            val batchRange: Option[(Long, Long)] =
-              if (keyIsLong && nUpserts > 0 && um.get("lo").exists(_ != null))
-                Some((metric("lo"), metric("hi")))
-              else None
-            // an all-delete batch still ran the (empty) write; unpartitioned
-            // writes emit 0-row part files from idle tasks — drop them
-            val newData =
-              if (nUpserts > 0) rawData
-              else { discard(rawData); Vector.empty }
+      val committed = commitWrite("applyBatch", batchId, rebase = true) { (prev, v) =>
+        // cached for the attempt's two writes; a rebased retry re-runs the
+        // collapse against the fresh head with a fresh `_seq` stamp
+        val cached = lww.cache()
+        try {
+          // Zero dedicated metadata jobs per micro-batch: op counts, the
+          // batch key range and the CHECK violation counts ride the WRITE
+          // jobs as Observation metrics (the earlier standalone
+          // groupBy-collect was a full extra job per batch; before that,
+          // per-question isEmpty() probes were three). Upserts only are
+          // constrained — tombstones carry no payload.
+          val (up, m) = writeObserved(
+            cached.filter(col("operation").isin("insert", "update")), v, constraints,
+            count(when(col("operation") === "update", 1)).as("nupd"))(writeUpserts)
+          val delObs = org.apache.spark.sql.Observation()
+          val rawDels = writeTombstones(cached.filter(col("operation") === "delete")
+            .observe(delObs, count(lit(1)).as("ndel")), v)
+          val dels =
+            if (observed(delObs.get, "ndel") > 0) rawDels
+            else { discard(MergeTable.Written(dels = rawDels), v); Vector.empty }
+          Some(Snapshot(v, prev.dataFiles ++ up.files, prev.deleteFiles ++ dels,
+            prev.appliedBatches,
+            prev.requiresDedup || observed(m, "nupd") > 0 || dels.nonEmpty,
+            prev.fileStats ++ up.keyStats) -> up.copy(dels = dels))
+        } finally cached.unpersist()
+      }
 
-            val delObs = org.apache.spark.sql.Observation()
-            val rawDels = writeTombstones(
-              cached.filter(col("operation") === "delete")
-                .observe(delObs, count(lit(1)).as("ndel")), v)
-            val nDels = observed(delObs.get, "ndel")
-            val newDels =
-              if (nDels > 0) rawDels
-              else { discard(Nil, rawDels); Vector.empty }
-
-            // reject-whole-batch BEFORE commit: staged files reclaimed, the
-            // snapshot never advances, the table is byte-identical
-            val ckCounts = cks.indices.map(i => metric(s"_ck$i"))
-            if (ckCounts.exists(_ > 0)) {
-              discard(newData, newDels)
-              failOnViolations(cks, ckCounts)
-            }
-
-            try commit(Snapshot(
-              v,
-              prev.map(_.dataFiles).getOrElse(Vector.empty) ++ newData,
-              prev.map(_.deleteFiles).getOrElse(Vector.empty) ++ newDels,
-              prev.map(_.appliedBatches).getOrElse(Set.empty) ++ batchId,
-              prev.exists(_.requiresDedup) || anyUpdates || newDels.nonEmpty,
-              prev.map(_.fileStats).getOrElse(Map.empty) ++
-                rangeStats(newData, batchRange)))
-            catch {
-              case e: MergeTable.CommitConflictException =>
-                // the losing attempt's files are unreferenced (its _seq
-                // stamp belongs to the slot the winner took) — reclaim
-                // eagerly; the retry re-runs the merge against the fresh
-                // head with a fresh stamp
-                discard(newData, newDels)
-                throw e
-            }
-          }
-        }
-      } finally cached.unpersist()
-
-      if (currentSnapshot.exists(_.deleteFiles.size >= deleteCompactThreshold))
+      if (committed && headOrEmpty.deleteFiles.size >= deleteCompactThreshold)
         try compactScoped(batch.sparkSession)
         catch {
           // auto-compaction is opportunistic maintenance: losing a commit
@@ -1110,10 +1077,9 @@ final class MergeTable(
     * ONE layout-only commit (`op = "binpack"` for BinPack, `"compact"`
     * otherwise): every key reads the same before and after, and the
     * change feed emits nothing for it. One skeleton serves every
-    * strategy: read the head and propose the next version; let the
-    * strategy pick the files it rewrites (the rest are carried
-    * untouched); materialize them, cached because the layout step reads
-    * them more than once; let the strategy lay them out; commit.
+    * strategy, staged inside [[commitWrite]]: the strategy picks the
+    * files it rewrites (the rest are carried untouched); their merged
+    * state is read and laid out by the strategy; commit.
     * Superseded files stay on disk for older retained snapshots (time
     * travel, rollback, lagging feed consumers) until `expireSnapshots` —
     * the Iceberg rewrite/expire split. A rewrite that loses the commit
@@ -1144,65 +1110,54 @@ final class MergeTable(
         s"stat column $c must be integral or timestamp, got ${schema(c).dataType}")
     }
 
-    val prev = currentSnapshot.getOrElse(return)
-    onBaseSnapshotRead()
-    val v = prev.version + 1
-    val targets: Vector[String] = how match {
-      case Scoped =>
-        if (!prev.requiresDedup && prev.deleteFiles.isEmpty) return
-        scopedTargets(spark, prev)
-      case BinPack(maxFiles) =>
+    commitWrite("rewrite") { (prev, v) =>
+      // the files the strategy rewrites (the rest are carried untouched);
+      // None when there is nothing to do
+      val targets: Option[Vector[String]] = how match {
+        case _ if prev.version < 0 => None
+        case Scoped =>
+          Option.when(prev.requiresDedup || prev.deleteFiles.nonEmpty)(
+            scopedTargets(spark, prev))
         // a bucketed snapshot is already exactly nBuckets files, and packing
         // would break the bucket-id file naming the catalog scan relies on
-        if (prev.buckets.isDefined) return
-        val small = prev.dataFiles.groupBy(dirOf).values
-          .filter(_.size > maxFiles).flatten.toVector
-        if (small.isEmpty) return
-        small
-      case _ => prev.dataFiles
+        case BinPack(maxFiles) if prev.buckets.isEmpty =>
+          Some(prev.dataFiles.groupBy(dirOf).values
+            .filter(_.size > maxFiles).flatten.toVector).filter(_.nonEmpty)
+        case BinPack(_) => None
+        case _ => Some(prev.dataFiles)
+      }
+      targets.map { targets =>
+        val pack = how.isInstanceOf[BinPack]
+        val targetSet = targets.toSet
+        val kept = prev.dataFiles.filterNot(targetSet)
+        // Bin-packing concatenates files as they are. Every other strategy
+        // rewrites the merged state of its targets: the whole snapshot, or a
+        // scoped subset whose collisions and tombstones all resolve inside
+        // it. A rewrite carries rows the table already holds, so it passes
+        // no CHECK gate.
+        def merged = if (kept.isEmpty) readAt(spark, prev)
+          else readSnapshot(spark, prev.copy(dataFiles = targets, requiresDedup = true))
+        val out = how match {
+          case BinPack(_) => packDirs(spark, prev, targets, v)
+          // scoped, nothing dirty: metadata-only, the commit clears the debt
+          case _ if targets.isEmpty => MergeTable.Written()
+          case Sorted(c, n) =>
+            writeRangeClustered(spark, merged, v, n, statCols)(_ => col(phys(c)))
+          case ZOrder(cs, n) =>
+            writeRangeClustered(spark, merged, v, n, statCols)(zValue(_, cs))
+          case Bucketed(n) =>
+            writeObserved(merged, v, Nil)(writeBucketed(spark, _, _, n))._1
+              .copy(buckets = Some(n))
+          case _ => writeObserved(merged, v, Nil)(writeUpserts)._1 // merge-all, scoped
+        }
+        Snapshot(v, kept ++ out.files,
+          if (pack) prev.deleteFiles else Vector.empty, prev.appliedBatches,
+          requiresDedup = pack && prev.requiresDedup,
+          prev.fileStats.filter(kv => !targetSet(kv._1)) ++ out.keyStats,
+          op = if (pack) "binpack" else "compact",
+          buckets = out.buckets, colStats = out.colStats) -> out
+      }
     }
-    val pack = how.isInstanceOf[BinPack]
-    val targetSet = targets.toSet
-    val kept = prev.dataFiles.filterNot(targetSet)
-    // Bin-packing concatenates files as they are. Every other strategy
-    // rewrites the merged state of its targets: the whole snapshot, or a
-    // scoped subset whose collisions and tombstones all resolve inside it.
-    val materialized =
-      if (pack || targets.isEmpty) None
-      else Some((if (kept.isEmpty) readAt(spark, prev)
-        else readSnapshot(spark,
-          prev.copy(dataFiles = targets, requiresDedup = true))).cache())
-    try {
-      val out = (how, materialized) match {
-        case (BinPack(_), _) => packDirs(spark, prev, targets, v)
-        // scoped, nothing dirty: metadata-only, the commit clears the debt
-        case (_, None) => MergeTable.Written(Vector.empty, Map.empty)
-        case (Sorted(c, n), Some(in)) =>
-          writeRangeClustered(spark, in, v, n, col(phys(c)), statCols)
-        case (ZOrder(cs, n), Some(in)) =>
-          writeRangeClustered(spark, in, v, n, zValue(in, cs), statCols)
-        case (_, Some(in)) => // merge-all, scoped, bucketed
-          val range = keyRangeOf(in) // cached — cheap agg, no re-scan
-          val buckets = Some(how).collect { case Bucketed(n) => n }
-          val files = buckets.fold(writeUpserts(in, v))(writeBucketed(spark, in, v, _))
-          MergeTable.Written(files, rangeStats(files, range), buckets = buckets)
-      }
-      try commit(Snapshot(v, kept ++ out.files,
-        if (pack) prev.deleteFiles else Vector.empty, prev.appliedBatches,
-        requiresDedup = pack && prev.requiresDedup,
-        prev.fileStats.filter(kv => !targetSet(kv._1)) ++ out.keyStats,
-        op = if (pack) "binpack" else "compact",
-        buckets = out.buckets, colStats = out.colStats))
-      catch {
-        case e: MergeTable.CommitConflictException =>
-          // the losing rewrite's files are unreferenced — reclaim eagerly
-          if (out.buckets.isDefined) {
-            spark.sql(s"DROP TABLE IF EXISTS ${bucketTableName(v)}")
-            deleteRecursively(bucketDir(v))
-          } else discard(out.files)
-          throw e
-      }
-    } finally materialized.foreach(_.unpersist())
   }
 
   /** The MoR→RoR maintenance the reference configures via
@@ -1288,19 +1243,24 @@ final class MergeTable(
         .toVector.sorted)
   }
 
-  /** The sorted and z-order layouts: `in` range-partitioned into
-    * `targetFiles` files by `by` (then the key) and sorted within each,
-    * so each file covers a narrow range of `statCols`; their per-file
-    * ranges are read back for the manifest.
+  /** The sorted and z-order layouts: `rows` range-partitioned into
+    * `targetFiles` files by `by(rows)` (then the key) and sorted within
+    * each, so each file covers a narrow range of `statCols`; their
+    * per-file ranges are read back for the manifest.
     */
-  private def writeRangeClustered(spark: SparkSession, in: DataFrame, v: Long,
-      targetFiles: Int, by: Column, statCols: Seq[String]): MergeTable.Written = {
-    val files = writeData(in, v)(_.withColumn("_z", by)
-      .repartitionByRange(targetFiles, col("_z"), col(phys(keyCol)))
-      .sortWithinPartitions(col("_z"), col(phys(keyCol)))
-      .drop("_z"))
-    val (keyStats, colStats) = statsReadback(spark, files, statCols)
-    MergeTable.Written(files, keyStats, colStats)
+  private def writeRangeClustered(spark: SparkSession, rows: DataFrame, v: Long,
+      targetFiles: Int, statCols: Seq[String])(by: DataFrame => Column): MergeTable.Written = {
+    // cached: the clustering value, the range sample and the write each read it
+    val in = rows.cache()
+    try {
+      val z = by(in)
+      val files = writeData(in, v)(_.withColumn("_z", z)
+        .repartitionByRange(targetFiles, col("_z"), col(phys(keyCol)))
+        .sortWithinPartitions(col("_z"), col(phys(keyCol)))
+        .drop("_z"))
+      val (keyStats, colStats) = statsReadback(spark, files, statCols)
+      MergeTable.Written(files, keyStats, colStats)
+    } finally { in.unpersist(); () }
   }
 
   /** Z-order value of `zCols` on the physically-named frame: each column
@@ -1783,15 +1743,11 @@ final class MergeTable(
     */
   def overwrite(rows: DataFrame, batchId: Option[String] = None): Unit =
     synchronized {
-      requireBatchId(batchId)
-      val prev = currentSnapshot
-      if (batchId.exists(id => prev.exists(_.appliedBatches.contains(id)))) return
-      val v = prev.map(_.version).getOrElse(-1L) + 1
-      val range = keyRangeOf(rows)
-      val files = writeUpserts(rows, v)
-      commit(Snapshot(v, files, Vector.empty,
-        prev.map(_.appliedBatches).getOrElse(Set.empty) ++ batchId,
-        requiresDedup = false, rangeStats(files, range), op = "overwrite"))
+      commitWrite("overwrite", batchId) { (prev, v) =>
+        val (out, _) = writeObserved(rows, v, constraints)(writeUpserts)
+        Some(Snapshot(v, out.files, Vector.empty, prev.appliedBatches,
+          requiresDedup = false, out.keyStats, op = "overwrite") -> out)
+      }
     }
 
   /** Filtered overwrite (`INSERT OVERWRITE ... PARTITION (p = 'x')`):
@@ -1810,11 +1766,10 @@ final class MergeTable(
 
   /** `TRUNCATE TABLE` parity: commit an empty snapshot. */
   def truncate(): Unit = synchronized {
-    val prev = currentSnapshot
-    val v = prev.map(_.version).getOrElse(-1L) + 1
-    commit(Snapshot(v, Vector.empty, Vector.empty,
-      prev.map(_.appliedBatches).getOrElse(Set.empty),
-      requiresDedup = false, op = "truncate"))
+    commitWrite("truncate") { (prev, v) =>
+      Some(Snapshot(v, Vector.empty, Vector.empty, prev.appliedBatches,
+        requiresDedup = false, op = "truncate") -> MergeTable.Written())
+    }
   }
 
   /** Roll the table back to an earlier retained snapshot (Iceberg's
@@ -1826,10 +1781,11 @@ final class MergeTable(
   def rollbackTo(version: Long): Unit = synchronized {
     require(Files.exists(manifestPath(version)), s"no snapshot v$version")
     val target = readManifest(version)
-    val v = currentSnapshot.map(_.version).getOrElse(-1L) + 1
-    commit(Snapshot(v, target.dataFiles, target.deleteFiles,
-      target.appliedBatches, target.requiresDedup, target.fileStats,
-      op = "rollback"))
+    commitWrite("rollbackTo") { (_, v) =>
+      Some(Snapshot(v, target.dataFiles, target.deleteFiles,
+        target.appliedBatches, target.requiresDedup, target.fileStats,
+        op = "rollback") -> MergeTable.Written())
+    }
   }
 
   // ---- ANALYZE / .stats (Iceberg-puffin / ANALYZE TABLE analog) ----
@@ -1978,8 +1934,7 @@ final class MergeTable(
     // not a raw NoSuchFileException out of the manifest parser
     asOf.foreach(v =>
       require(v >= 0 && Files.exists(manifestPath(v)), s"no snapshot v$v"))
-    val s = asOf.map(readManifest).orElse(currentSnapshot)
-      .getOrElse(Snapshot(-1, Vector.empty, Vector.empty, Set.empty, false))
+    val s = asOf.map(readManifest).getOrElse(headOrEmpty)
     // missing bytes (e.g. GC'd after expiry) report size 0, matching
     // partitionsDf's sentinel
     val rows =
@@ -2006,16 +1961,10 @@ final class MergeTable(
     */
   def partitionsDf(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val s = currentSnapshot
-      .getOrElse(Snapshot(-1, Vector.empty, Vector.empty, Set.empty, false))
-    s.dataFiles
+    headOrEmpty.dataFiles
       .map { f =>
-        val part = f.lastIndexOf('/') match {
-          case -1 => ""
-          case i  => f.substring(0, i)
-        }
         val p = dataPath(f)
-        (part, if (Files.exists(p)) Files.size(p) else 0L)
+        (dirOf(f), if (Files.exists(p)) Files.size(p) else 0L)
       }
       .groupBy(_._1).toSeq
       .map { case (part, fs) => (part, fs.size.toLong, fs.map(_._2).sum) }
@@ -2127,9 +2076,7 @@ final class MergeTable(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], changeFeedSchema)
     if (fromVersion == latest) return emptyOut
 
-    var prevSnap =
-      if (fromVersion < 0) Snapshot(-1, Vector.empty, Vector.empty, Set.empty, false)
-      else readManifest(fromVersion)
+    var prevSnap = if (fromVersion < 0) noSnapshot else readManifest(fromVersion)
     val newData = Vector.newBuilder[String]
     val newDels = Vector.newBuilder[String]
     val markers = Vector.newBuilder[Long]
@@ -2471,11 +2418,15 @@ object MergeTable {
     final case class BinPack(maxFilesPerPartition: Int = 8) extends Rewrite
   }
 
-  /** A rewrite layout's new files, their stats, and its bucket count. */
-  private final case class Written(files: Vector[String],
-      keyStats: Map[String, (Long, Long)],
+  /** What one commit attempt staged: new data files with their key and
+    * column stats, the bucket count of a bucketed layout, and new delete
+    * files. [[MergeTable.commitWrite]] deletes it when the commit loses.
+    */
+  private final case class Written(files: Vector[String] = Vector.empty,
+      keyStats: Map[String, (Long, Long)] = Map.empty,
       colStats: Map[String, Map[String, (Long, Long)]] = Map.empty,
-      buckets: Option[Int] = None)
+      buckets: Option[Int] = None,
+      dels: Vector[String] = Vector.empty)
 
   /** Column types whose per-file stats fit an order-preserving long. */
   private val StatTypes: Set[org.apache.spark.sql.types.DataType] = Set(
@@ -2483,11 +2434,14 @@ object MergeTable {
     org.apache.spark.sql.types.TimestampType)
 
   /** A commit lost the optimistic-concurrency race: the table head moved
-    * past the snapshot's base between read and commit. `appendAll` /
-    * `applyBatch` catch this internally and rebase (bounded retries);
-    * callers of maintenance / overwrite / rollback ops see it directly
-    * and decide — their intent against a moved head is ambiguous, so
-    * re-reading and re-issuing is the caller's call, never automatic.
+    * past the snapshot's base between read and commit. Every writer
+    * commits through one protocol, [[MergeTable.commitWrite]], which
+    * deletes the losing attempt's staged files before this propagates.
+    * `appendAll`, `applyBatch` and `inheritAppliedBatches` catch it
+    * internally and rebase (bounded retries); callers of `rewrite`,
+    * `overwrite`, `truncate` and `rollbackTo` see it directly and decide —
+    * their intent against a moved head is ambiguous, so re-reading and
+    * re-issuing is the caller's call, never automatic.
     */
   final class CommitConflictException(msg: String) extends RuntimeException(msg)
 

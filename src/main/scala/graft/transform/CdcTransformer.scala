@@ -241,13 +241,12 @@ object CdcTransformer {
 
   /** Write rejected records to the dead-letter sink (S7):
     * `<root>/year=…/month=…/day=…/hour=…/error_type=…/` parquet files.
+    * One Spark job: a batch with no rejected rows writes no partition
+    * directory, so it needs no emptiness probe first.
     */
-  def writeErrors(errors: DataFrame, errorRoot: String): Unit = {
-    if (!errors.isEmpty) {
-      errors.write
-        .mode("append")
-        .partitionBy("year", "month", "day", "hour", "error_type")
-        .parquet(errorRoot)
-    }
-  }
+  def writeErrors(errors: DataFrame, errorRoot: String): Unit =
+    errors.write
+      .mode("append")
+      .partitionBy("year", "month", "day", "hour", "error_type")
+      .parquet(errorRoot)
 }

@@ -134,6 +134,12 @@ class CheckConstraintSpec extends SparkSpec {
       Option(e.getCause).exists(_.getMessage.contains("nonneg")))
     assert(spark.sql("SELECT count(*) FROM ckc.d.t").collect()(0)
       .getLong(0) === 1L)
+    // INSERT OVERWRITE is gated like INSERT INTO
+    intercept[Exception] {
+      spark.sql("INSERT OVERWRITE ckc.d.t VALUES (2, -7)")
+    }
+    assert(spark.sql("SELECT count(*) FROM ckc.d.t").collect()(0)
+      .getLong(0) === 1L)
     spark.sql("CALL ckc.system.drop_check('d.t', 'nonneg')")
     spark.sql("INSERT INTO ckc.d.t VALUES (2, -7)")
     assert(spark.sql("SELECT count(*) FROM ckc.d.t").collect()(0)

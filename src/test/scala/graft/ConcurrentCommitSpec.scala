@@ -201,9 +201,17 @@ class ConcurrentCommitSpec extends SparkSpec {
 
   test("a rewrite losing the race to a commit landed after its head read throws and leaves no unreferenced file") {
     import MergeTable.Rewrite._
-    val strategies = Seq(MergeAll, Scoped, Bucketed(4), Sorted("amount", 4),
-      ZOrder(Seq("amount", "trans_datetime"), 4), BinPack(1))
-    strategies.zipWithIndex.foreach { case (how, i) =>
+    // every writer that hands a conflict to its caller: each rewrite
+    // strategy, and the snapshot-replacing writers
+    val writers: Seq[(String, MergeTable => Unit)] =
+      Seq(MergeAll, Scoped, Bucketed(4), Sorted("amount", 4),
+        ZOrder(Seq("amount", "trans_datetime"), 4), BinPack(1))
+        .map(how => how.toString -> ((t: MergeTable) => t.rewrite(spark, how))) ++ Seq(
+        "overwrite" -> ((t: MergeTable) => t.overwrite(
+          batch((5L, "like", 50, "insert", "2023-01-01 00:00:07", 7L)).drop("operation"))),
+        "truncate" -> ((t: MergeTable) => t.truncate()),
+        "rollbackTo(0)" -> ((t: MergeTable) => t.rollbackTo(0)))
+    writers.zipWithIndex.foreach { case ((how, write), i) =>
       val root = tmpDir(s"ccr$i") + "/t"
       val t = MergeTable.retailTrans(root, threshold = 100)
       t.applyBatch(batch((1L, "cart", 10, "insert", "2023-01-01 00:00:01", 1L),
@@ -221,7 +229,7 @@ class ConcurrentCommitSpec extends SparkSpec {
         b.applyBatch(batch((9L, "visit", 90, "insert", "2023-01-01 00:00:09", 9L)),
           Some("foreign"))
       }
-      intercept[MergeTable.CommitConflictException](a.rewrite(spark, how))
+      intercept[MergeTable.CommitConflictException](write(a))
       assert(landed, s"$how: seam never fired")
 
       val fresh = MergeTable.open(root)
